@@ -104,6 +104,15 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--format", default="parquet", choices=["parquet", "json"])
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args(argv)
+    rates: dict[str, float] = {}
+    for tok in args.mix.split(",") if args.mix else []:
+        lang, sep, rate = tok.partition("=")
+        try:
+            if not sep:
+                raise ValueError
+            rates[lang] = float(rate)
+        except ValueError:
+            ap.error(f"--mix: malformed token {tok!r} (want lang=rate)")
 
     import pyspark.sql.functions as F
 
@@ -130,13 +139,10 @@ def main(argv: list[str] | None = None) -> int:
     ).persist()  # pack_shards runs bounded aggs over this lineage and
     # write_shards scans it again — persist BEFORE the fan-out or the
     # full Arrow analyze pass re-executes per action
-    exported = out  # the persisted handle (out is rebound below)
+    cached = [out]  # persisted handles (out is rebound below)
     if args.mix:
         from pyspider_spark.ops.sampling import stratified_sample
 
-        rates = {
-            k: float(v) for k, v in (kv.split("=") for kv in args.mix.split(","))
-        }
         out = stratified_sample(
             spark, out, rates, key_col="lang", default_rate=args.mix_default
         )
@@ -166,11 +172,15 @@ def main(argv: list[str] | None = None) -> int:
             packed = pack_shards(
                 spark, pk, args.pack_budget, tiebreak_col="_orig"
             ).select(F.col("_orig").alias("doc_id"), F.col("shard_id").alias("shard"))
-        out = out.drop("shard").join(packed, "doc_id")
+        # write_shards, count() and the shard count each scan out —
+        # persist so the pack join runs once
+        out = out.drop("shard").join(packed, "doc_id").persist()
+        cached.append(out)
     write_shards(out, args.out, fmt=args.format, n_shards=args.shards)
     n_out = out.count()
     shards = out.groupBy("shard").count().count()
-    exported.unpersist()
+    for df in cached:
+        df.unpersist()
     print(
         json.dumps(
             {

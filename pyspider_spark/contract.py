@@ -2073,14 +2073,15 @@ def q_corpus_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Deterministic stratified sampling oracle: the keep decision is a
 # pure function of doc_id (first 8 md5 hex digits as u32 vs an exact
 # integer threshold per language stratum) — the same construction as
-# the export shard ids, so both engines agree bit-for-bit. Thresholds
-# are computed ONCE here and embedded in both sides.
+# the export shard ids, so both engines agree bit-for-bit; a NULL id
+# takes the md5('') coin on both sides (ops/sampling._u32_expr).
+# Thresholds are computed ONCE here and embedded in both sides.
 _SAMPLE_RATES = {"en": 1.0, "de": 0.5, "es": 0.25, "fr": 0.1, "zh": 0.0}
 _SAMPLE_THRESH = {k: int(r * (1 << 32)) for k, r in _SAMPLE_RATES.items()}
 
 ORACLE_CORPUS_SAMPLE = f"""
 SELECT doc_id, lang FROM documents
-WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+WHERE CAST(concat('0x', substr(md5(coalesce(CAST(doc_id AS VARCHAR), '')), 1, 8)) AS BIGINT)
   < CASE lang
       {" ".join(f"WHEN '{k}' THEN {t}" for k, t in _SAMPLE_THRESH.items())}
       ELSE 0 END
@@ -2363,11 +2364,6 @@ _CONVERTED_ORACLE: dict[str, str] = {
     )
 }
 assert not COMMON_SQL, f"unexplained spec pins remain: {sorted(COMMON_SQL)}"
-
-
-def _frontier_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(f"WITH {FRONTIER_CTE} SELECT * FROM frontier")
 
 
 def q_taskid_md5(spark: SparkSession, sf_dir: str) -> DataFrame:

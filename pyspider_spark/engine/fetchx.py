@@ -120,15 +120,6 @@ ANALYZE_TYPE = StructType(
 )
 
 
-@F.pandas_udf(ANALYZE_TYPE)
-def analyze_udf(text: pd.Series) -> pd.DataFrame:
-    """Per-page analysis (ops/textstats): the built-in 'default
-    handler' body — token count, lang guess, quality, simhash."""
-    from pyspider_spark.ops.textstats import analyze_frame
-
-    return analyze_frame(text)
-
-
 # fused dispatch + analysis: ONE Arrow pass over the html batch emits
 # extraction AND the per-page analysis columns (flat; the engine
 # reassembles the `analysis` struct JVM-side). Two separate pandas UDFs

@@ -46,9 +46,8 @@ Production swap-in: Iceberg v2 ``MERGE INTO`` with merge-on-read row
 delete/upsert files and a scheduled ``rewrite_data_files`` compaction —
 the semantics implemented here over parquet dirs + the JSON manifest.
 
-Manifest format (``tables.frontier``): ``{pid: entry}`` where entry is
-either a legacy plain string (base dir only — upgraded transparently)
-or ``{"base": rel|None, "deltas": [rel, ...]}``.
+Manifest format (``tables.frontier``): ``{pid: {"base": rel|None,
+"deltas": [rel, ...]}}``.
 """
 
 from __future__ import annotations
@@ -64,10 +63,8 @@ KEY = ["project", "taskid"]
 FR_COLS = [f.name for f in S.FRONTIER_SCHEMA.fields]
 
 
-def norm_entry(v) -> dict:
-    """Normalize a manifest frontier entry (legacy str = bare base)."""
-    if isinstance(v, str):
-        return {"base": v, "deltas": []}
+def norm_entry(v: dict) -> dict:
+    """A private copy of a manifest frontier entry."""
     return {"base": v.get("base"), "deltas": list(v.get("deltas") or [])}
 
 

@@ -50,7 +50,7 @@ def migrate_partitions(engine, new_n: int) -> dict:
     job. On success the engine's config is updated in place and the
     next ``run_round`` continues on the new layout.
     """
-    from pyspider_spark.engine.round import pid_col
+    from pyspider_spark.engine.stages import pid_col, seen_k_col
 
     snap, cfg = engine.snap, engine.cfg
     man = snap.read_manifest()
@@ -78,15 +78,18 @@ def migrate_partitions(engine, new_n: int) -> dict:
         .partitionBy("pid")
         .parquet(mig_dir)
     )
-    new_dirs: dict[str, str] = {}
+    new_dirs: dict[str, dict] = {}
     for name in sorted(os.listdir(mig_dir)):
         if name.startswith("pid="):
-            new_dirs[name.split("=", 1)[1]] = snap.rel(os.path.join(mig_dir, name))
+            new_dirs[name.split("=", 1)[1]] = {
+                "base": snap.rel(os.path.join(mig_dir, name)),
+                "deltas": [],
+            }
 
     # --- host_state rewrite under the new bucketing (token-bucket rows
     # share the frontier's pid layout for touch-only round rewrites)
     hs_dirs = engine._host_state_dirs(man)
-    hs = engine._read_host_state(man, hs_dirs)
+    hs = engine._read_host_state(hs_dirs)
     hs_mig_dir = os.path.join(snap.round_dir(r), f"host_state_mig{new_n}")
     (
         hs.withColumn("pid", pid_col(new_n))
@@ -103,7 +106,7 @@ def migrate_partitions(engine, new_n: int) -> dict:
     # --- bloom rebuild from the authoritative key set, sized per pid
     fr_keys = fr.select(
         pid_col(new_n).alias("pid"),
-        F.md5(F.concat_ws("|", "project", "canon_url")).alias("seen_k"),
+        seen_k_col().alias("seen_k"),
     )
     counts = {
         int(row["pid"]): int(row["n"])

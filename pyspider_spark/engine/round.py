@@ -35,9 +35,11 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from pyspider_spark.config import (
@@ -62,7 +64,9 @@ from pyspider_spark.engine.stages import (
     ensure_raw_columns,
     merge_frontier_delta,
     normalize_updates,
+    pid_col,
     retry_delay_expr,
+    seen_k_col,
 )
 
 SCHEDULABLE = ("RUNNING", "DEBUG")
@@ -96,16 +100,6 @@ def cron_due_rows(
                 new_state[name] = k
                 rows.append((f"data:,_on_cronjob|{name}|{k}", name, "_on_cronjob"))
     return rows, new_state
-
-
-def pid_col(n_partitions: int, host: str = "host") -> Column:
-    """JVM-side twin of ``kernels.canon.partition_of`` — first 4 bytes
-    of md5(host) as big-endian int, mod n (byte-equal by construction,
-    pinned by tests/test_canon.py)."""
-    return (
-        F.conv(F.substring(F.md5(F.col(host)), 1, 8), 16, 10).cast("long")
-        % n_partitions
-    ).cast("int")
 
 
 def _parquet_rows(d: str) -> int:
@@ -483,11 +477,6 @@ class CrawlEngine:
         return self.snap.rel(path)
 
     # ---- partitioned frontier (merge-on-read; engine/frontier.py) -------
-    def _frontier_dirs(self, man: dict | None) -> dict[int, dict]:
-        """pid -> {"base": rel|None, "deltas": [rel, ...]} (legacy bare
-        string entries normalize to base-only)."""
-        return FR.entries_of(man)
-
     def _read_frontier(self, dirs: dict[int, dict], pids) -> DataFrame:
         """MoR-resolved live rows of `pids` (base ⊖ delta-keys ⊕
         latest-delta; tombstones filtered)."""
@@ -501,21 +490,12 @@ class CrawlEngine:
     # rewrites only partitions whose hosts scheduled, the rest carry
     # forward by path — at 10^8+ hosts a full rewrite per round would
     # be the same scale bug the frontier had) ---------------------------
-    def _host_state_dirs(self, man: dict | None) -> dict[int, str] | None:
-        """pid -> dir map; None = legacy flat layout (pre-partitioned
-        snapshot) — the next write migrates it in place."""
-        t = (man or {}).get("tables", {}).get("host_state")
-        if t is None:
-            return {}
-        if isinstance(t, str):
-            return None
+    def _host_state_dirs(self, man: dict | None) -> dict[int, str]:
+        """pid -> dir map of the committed host_state partitions."""
+        t = (man or {}).get("tables", {}).get("host_state") or {}
         return {int(p): rel for p, rel in t.items()}
 
-    def _read_host_state(self, man: dict | None, dirs: dict[int, str] | None, pids=None) -> DataFrame:
-        if dirs is None:  # legacy single-dir layout
-            return self.spark.read.schema(S.HOST_STATE_SCHEMA).parquet(
-                self.snap.abspath(man["tables"]["host_state"])
-            )
+    def _read_host_state(self, dirs: dict[int, str], pids=None) -> DataFrame:
         paths = [
             self.snap.abspath(rel)
             for p, rel in dirs.items()
@@ -528,38 +508,23 @@ class CrawlEngine:
     # ---- seen-state blobs ------------------------------------------------
     def _blob_df(self, man: dict | None) -> DataFrame:
         """Previous-round blob state as BLOB_SCHEMA rows, WITHOUT the
-        bytes transiting the driver: new-style manifest entries
-        (``{"table": rel}``) group into per-table parquet scans filtered
-        to the pids each table still owns; legacy ``.bin`` entries
-        (pre-refactor snapshots) fall back to a driver read + lift."""
-        from pyspider_spark.engine.seen import BLOB_SCHEMA, blobs_df_of
+        bytes transiting the driver: manifest entries (``{"table":
+        rel}``) group into per-table parquet scans filtered to the pids
+        each table still owns."""
+        from pyspider_spark.engine.seen import BLOB_SCHEMA
 
         by_table: dict[str, list[int]] = {}
-        legacy: dict[int, tuple[bytes | None, bytes | None, int]] = {}
-        for pid, ent in ((man or {}).get("blobs", {}) or {}).items():
-            if ent.get("table"):
-                by_table.setdefault(ent["table"], []).append(int(pid))
-            elif ent.get("bloom") or ent.get("cuckoo"):
-                b = c = None
-                if ent.get("bloom"):
-                    with open(self.snap.abspath(ent["bloom"]), "rb") as f:
-                        b = f.read()
-                if ent.get("cuckoo"):
-                    with open(self.snap.abspath(ent["cuckoo"]), "rb") as f:
-                        c = f.read()
-                legacy[int(pid)] = (b, c, int(ent.get("n_keys", 0)))
+        for pid, ent in ((man or {}).get("blobs") or {}).items():
+            by_table.setdefault(ent["table"], []).append(int(pid))
         parts = [
             self.spark.read.schema(BLOB_SCHEMA)
             .parquet(self.snap.abspath(rel))
             .filter(F.col("pid").isin(pids))
             for rel, pids in sorted(by_table.items())
         ]
-        if legacy or not parts:
-            parts.append(blobs_df_of(self.spark, legacy))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        if not parts:
+            return S.empty_df(self.spark, BLOB_SCHEMA)
+        return reduce(DataFrame.unionByName, parts)
 
     def blob_state(self, pid: int) -> tuple[bytes | None, bytes | None, int]:
         """Driver-side read of one partition's current blob bytes
@@ -570,21 +535,12 @@ class CrawlEngine:
         ent = (self.snap.read_manifest() or {}).get("blobs", {}).get(str(pid))
         if ent is None:
             return (None, None, 0)
-        if ent.get("table"):
-            t = pq.read_table(self.snap.abspath(ent["table"]))
-            t = t.filter(pc.equal(t["pid"], pid))
-            if t.num_rows == 0:
-                return (None, None, 0)
-            row = t.to_pylist()[0]
-            return (row["bloom_blob"], row["cuckoo_blob"], int(row["n_keys"] or 0))
-        b = c = None
-        if ent.get("bloom"):
-            with open(self.snap.abspath(ent["bloom"]), "rb") as f:
-                b = f.read()
-        if ent.get("cuckoo"):
-            with open(self.snap.abspath(ent["cuckoo"]), "rb") as f:
-                c = f.read()
-        return (b, c, int(ent.get("n_keys", 0)))
+        t = pq.read_table(self.snap.abspath(ent["table"]))
+        t = t.filter(pc.equal(t["pid"], pid))
+        if t.num_rows == 0:
+            return (None, None, 0)
+        row = t.to_pylist()[0]
+        return (row["bloom_blob"], row["cuckoo_blob"], int(row["n_keys"] or 0))
 
     def _maybe_rebuild_blooms(
         self,
@@ -620,7 +576,7 @@ class CrawlEngine:
         }
         fr_sat = self._read_frontier(fr_dirs, saturated).select(
             pid_col(cfg.n_partitions).alias("pid"),
-            F.md5(F.concat_ws("|", "project", "canon_url")).alias("seen_k"),
+            seen_k_col().alias("seen_k"),
         )
         rebuilt = (
             rebuild_blooms(fr_sat, caps, cfg)
@@ -632,8 +588,6 @@ class CrawlEngine:
         rel = self.snap.rel(out_dir)
         for pid, n in _parquet_pid_nkeys(out_dir).items():
             ent = dict(blob_meta.get(str(pid), {}))
-            ent.pop("bloom", None)
-            ent.pop("cuckoo", None)
             ent.update(table=rel, n_keys=n, capacity=caps[pid])
             blob_meta[str(pid)] = ent
         return (
@@ -645,7 +599,7 @@ class CrawlEngine:
     def frontier(self) -> DataFrame:
         """The full current frontier (all partition dirs of the last
         committed snapshot) — read-only convenience for tests/queries."""
-        dirs = self._frontier_dirs(self.snap.read_manifest())
+        dirs = FR.entries_of(self.snap.read_manifest())
         return self._read_frontier(dirs, list(dirs))
 
     def frontier_asof(self, r: int) -> DataFrame:
@@ -657,7 +611,7 @@ class CrawlEngine:
             raise ValueError(
                 f"round {r} has no retained snapshot (gc'd or never committed)"
             )
-        dirs = self._frontier_dirs(man)
+        dirs = FR.entries_of(man)
         return self._read_frontier(dirs, list(dirs))
 
     # ---- cron (F9) --------------------------------------------------------
@@ -670,30 +624,21 @@ class CrawlEngine:
 
     # ---- one round ----------------------------------------------------------
     def run_round(self, r: int, inject: DataFrame | None = None) -> dict:
-        """One crawl round. Wraps the body so the background futures
-        (blob-table write, concurrent compaction) are cancelled/joined
-        when any phase between their submission and the commit raises —
-        otherwise their Spark jobs keep running detached and their own
-        failures mask the phase error (round-2 ADVICE)."""
-        self._bg_futs: list = []
+        """One crawl round. Its five background jobs (blob-table write,
+        concurrent fold, follows/results/host_state sinks) share ONE
+        pool that is joined before the round returns or raises: when a
+        phase fails, no Spark write outlives the round to race the
+        resume that overwrites the same ``rounds/rN`` dirs, and the
+        phase error wins over any background failure."""
+        pool = ThreadPoolExecutor(max_workers=5)
         try:
-            return self._run_round_impl(r, inject)
-        except BaseException:
-            for f in self._bg_futs:
-                f.cancel()
-                try:
-                    # join (don't abandon): a compaction fold mid-flight
-                    # must finish or fail before the caller sees the
-                    # error, so no detached jobs outlive the round; its
-                    # own exception is secondary — the phase error wins
-                    f.result(timeout=600)
-                except Exception:
-                    pass
-            raise
+            return self._run_round_impl(r, inject, pool)
         finally:
-            self._bg_futs = []
+            pool.shutdown(wait=True, cancel_futures=True)
 
-    def _run_round_impl(self, r: int, inject: DataFrame | None = None) -> dict:
+    def _run_round_impl(
+        self, r: int, inject: DataFrame | None, pool: ThreadPoolExecutor
+    ) -> dict:
         cfg, snap, spark = self.cfg, self.snap, self.spark
         now = cfg.now(r)
         t_start = time.time()
@@ -721,7 +666,7 @@ class CrawlEngine:
         # P6: exception-burst pauses; a project update re-enables
         paused: set[str] = set() if changed else set(state.get("paused", []))
 
-        fr_dirs = self._frontier_dirs(man)
+        fr_dirs = FR.entries_of(man)
         # exact incremental live-row lineage (per pid), loaded PRE-round:
         # inserts add, settles/restarts replace, cancels recomputed
         # exactly post-write; also drives the concurrent compaction
@@ -730,13 +675,6 @@ class CrawlEngine:
         # round's delta, so the two are independent jobs)
         lin_prev = (man or {}).get("lineage", {}) or {}
         live = {int(p): int(v) for p, v in (lin_prev.get("frontier_pid_rows") or {}).items()}
-        if not live and fr_dirs:
-            # legacy (pre-MoR) manifest: bases are exact, no deltas yet
-            live = {
-                p: _parquet_rows(snap.abspath(e["base"]))
-                for p, e in fr_dirs.items()
-                if e["base"]
-            }
         delta_tot = {
             int(p): int(v) for p, v in (lin_prev.get("frontier_delta_rows") or {}).items()
         }
@@ -749,7 +687,7 @@ class CrawlEngine:
         )
         follows = self._read(man, "follows", S.RAW_UPDATE_SCHEMA)
         hs_dirs = self._host_state_dirs(man)
-        host_state = self._read_host_state(man, hs_dirs)
+        host_state = self._read_host_state(hs_dirs)
 
         cron_rows, cron_state = self._cron_rows(
             state.get("cron_count", {}), now, paused
@@ -820,9 +758,6 @@ class CrawlEngine:
         # table via a DISTRIBUTED narrow write (state rows prune by
         # parquet null-count stats) — the driver touches only the
         # (pid, n_keys) integers; blob bytes never leave the executors.
-        # "blobs_tbl", not "blobs": the legacy .bin dir was
-        # rounds/rX/blobs — a crash-resume over a legacy snapshot must
-        # not overwrite-delete referenced .bin files.
         blobs_dir = snap.table_dir(r, "blobs_tbl")
 
         def _write_blobs_tbl() -> None:
@@ -839,8 +774,6 @@ class CrawlEngine:
             blobs_rel = snap.rel(blobs_dir)
             for pid, n in _parquet_pid_nkeys(blobs_dir).items():
                 ent = dict(blob_meta.get(str(pid), {}))
-                ent.pop("bloom", None)
-                ent.pop("cuckoo", None)
                 ent.update(
                     table=blobs_rel,
                     n_keys=n,
@@ -848,11 +781,7 @@ class CrawlEngine:
                 )
                 blob_meta[str(pid)] = ent
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        blob_pool = ThreadPoolExecutor(max_workers=1)
-        f_blobs = blob_pool.submit(_write_blobs_tbl)
-        self._bg_futs.append(f_blobs)
+        f_blobs = pool.submit(_write_blobs_tbl)
         # ONE Arrow pass over (pid, cancel): the update-touched
         # partition set and the cancel totals (reused by the rare
         # cancel-lineage recompute below)
@@ -1010,8 +939,7 @@ class CrawlEngine:
                 p: {"base": e["base"], "deltas": list(e["deltas"])}
                 for p, e in fr_dirs.items()
             }
-            comp_pool = ThreadPoolExecutor(max_workers=1)
-            comp_fut = comp_pool.submit(
+            comp_fut = pool.submit(
                 FR.compact,
                 spark,
                 snap,
@@ -1022,8 +950,6 @@ class CrawlEngine:
                 cfg.frontier_rowgroup_bytes,
                 cfg.frontier_broadcast_max_keys,
             )
-            comp_pool.shutdown(wait=False)
-            self._bg_futs.append(comp_fut)
 
         # --- host_state carry-over (only hosts that actually scheduled;
         # merged into the pid-partitioned layout post-settle, below)
@@ -1243,15 +1169,12 @@ class CrawlEngine:
         # cache exactly once. Launching sibling sinks concurrently
         # here would each race to compute the cold cache — measured
         # 3.5x slower at bench scale (3 jobs × full page scan +
-        # extraction) — so the pool below starts only after this
+        # extraction) — so the sinks below start only after this
         # barrier, serving warm cache.
-        from concurrent.futures import ThreadPoolExecutor
-
         settle_rel = self._write(settle, r, "settle")
         # follows/results read the now-warm `fetched` cache and don't
         # need the settle footers — start them before the driver's
         # Arrow pass so the footer read overlaps executor work
-        pool = ThreadPoolExecutor(max_workers=3)
         f_follows = pool.submit(self._write, new_follows, r, "follows")
         f_results = pool.submit(self._write, results, r, "results")
         # ONE Arrow pass over (project, kind, pid): totals for the
@@ -1282,13 +1205,9 @@ class CrawlEngine:
             """Touch-only host_state rewrite (MERGE semantics, same as
             the frontier): every scheduled row settles in-round, so
             pids(hs_new) ⊆ settle_pids — rewrite those partitions,
-            carry the rest forward by path. A legacy flat snapshot
-            (hs_dirs None) migrates to the partitioned layout here."""
-            if hs_dirs is None:
-                base, carried = host_state, {}
-            else:
-                carried = {p: rel for p, rel in hs_dirs.items() if p not in settle_pids}
-                base = self._read_host_state(man, hs_dirs, settle_pids)
+            carry the rest forward by path."""
+            carried = {p: rel for p, rel in hs_dirs.items() if p not in settle_pids}
+            base = self._read_host_state(hs_dirs, settle_pids)
             out = base.join(hs_new.select("host"), "host", "left_anti").unionByName(hs_new)
             d = snap.table_dir(r, "host_state")
             (
@@ -1472,7 +1391,7 @@ class CrawlEngine:
         tables["frontier"] = {str(p): entries[p] for p in sorted(entries)}
         mark("frontier_write")
 
-        # --- drain the concurrent sink pool
+        # --- drain the concurrent sinks
         tables["follows"] = f_follows.result()
         tables["host_state"] = f_host.result()
         tables["probe"] = probe_rel
@@ -1482,7 +1401,6 @@ class CrawlEngine:
         tables["schedule"] = list(tables["schedule"]) + [sched_rel]
         tables.setdefault("settle", [])
         tables["settle"] = list(tables["settle"]) + [settle_rel]
-        pool.shutdown()
 
         # --- counts from written artifacts (driver-side, no Spark jobs)
         n_frontier = sum(live.values())
@@ -1539,7 +1457,6 @@ class CrawlEngine:
             ]
 
         f_blobs.result()  # blob_meta complete before it is committed
-        blob_pool.shutdown()
         snap.commit(
             {
                 "round": r,

@@ -91,8 +91,8 @@ BLOB_SCHEMA = StructType(
 
 
 def blobs_df_of(spark, prev: dict[int, tuple[bytes | None, bytes | None, int]]):
-    """Lift a driver-side blob dict into BLOB_SCHEMA rows (legacy
-    snapshots, tests, contract entries)."""
+    """Lift a driver-side blob dict into BLOB_SCHEMA rows (tests,
+    contract entries)."""
     rows = [(int(p), b, c, int(n)) for p, (b, c, n) in sorted((prev or {}).items())]
     return spark.createDataFrame(rows, BLOB_SCHEMA)
 

@@ -6,7 +6,8 @@ subset of semantics the engine needs over plain Parquet directories:
 
 - versioned table writes (one directory per table per round)
 - append-only tables as lists of delta directories
-- binary state blobs (bloom/cuckoo per partition) as files
+- binary state blobs (bloom/cuckoo per partition) as rows of small
+  per-round parquet tables
 - **atomic round commit**: everything is staged under ``rounds/r{N}/``,
   then a manifest JSON naming every table path + blob path + row counts
   is atomically renamed into place last (``os.replace``). A crash
@@ -76,11 +77,6 @@ class SnapshotStore:
     def table_dir(self, r: int, name: str) -> str:
         return os.path.join(self.round_dir(r), name)
 
-    def blob_dir(self, r: int) -> str:
-        d = os.path.join(self.round_dir(r), "blobs")
-        os.makedirs(d, exist_ok=True)
-        return d
-
     def abspath(self, rel: str) -> str:
         return os.path.join(self.root, rel)
 
@@ -112,17 +108,8 @@ class SnapshotStore:
                 for v in p:
                     _mark(v)
 
-        for rel in list(man.get("tables", {}).values()):
-            _mark(rel)
-        for ent in man.get("blobs", {}).values():
-            if isinstance(ent, dict):  # {"table": rel} | legacy {"bloom": rel, ...}
-                _mark(ent.get("table"))
-                _mark(ent.get("bloom"))
-                _mark(ent.get("cuckoo"))
-            else:
-                for blob in ent if isinstance(ent, (list, tuple)) else [ent]:
-                    if blob:
-                        _mark(blob)
+        _mark(man.get("tables", {}))
+        _mark(man.get("blobs", {}))  # {pid: {"table": rel, ...}}
         rounds_root = os.path.join(self.root, "rounds")
         if not os.path.isdir(rounds_root):
             return

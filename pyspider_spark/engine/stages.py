@@ -18,18 +18,35 @@ from collections.abc import Iterator
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import StructType
 
 from pyspider_spark.config import ACTIVE, RoundConfig
 from pyspider_spark.engine.schema import RAW_UPDATE_SCHEMA, UPDATE_SCHEMA
 from pyspider_spark.kernels.canon import (
     canonicalize_series,
     host_series,
-    partition_of,
     taskid_series,
 )
-from pyspider_spark.oracle.simulator import seen_key
 
 KEY = ["project", "taskid"]
+
+
+def pid_col(n_partitions: int, host: str = "host") -> Column:
+    """JVM-side twin of ``kernels.canon.partition_of`` — first 4 bytes
+    of md5(host) as big-endian int, mod n (byte-equal by construction,
+    pinned by tests/test_canon.py)."""
+    return (
+        F.conv(F.substring(F.md5(F.col(host)), 1, 8), 16, 10).cast("long")
+        % n_partitions
+    ).cast("int")
+
+
+def seen_k_col() -> Column:
+    """Key of the bloom/cuckoo URL-seen set: md5(project|canon_url) —
+    the JVM twin of ``oracle.simulator.seen_key`` (pinned by
+    tests/test_frontier_partitions.py)."""
+    return F.md5(F.concat_ws("|", "project", "canon_url"))
+
 
 def order_cols() -> list[Column]:
     """O1 total order (scheduler/task_queue.py — InQueueTask.__lt__):
@@ -131,9 +148,12 @@ def ensure_raw_columns(df: DataFrame) -> DataFrame:
 
 def normalize_updates(raw: DataFrame, cfg: RoundConfig) -> DataFrame:
     """Vectorized normalization (simulator._norm parity): canonicalize,
-    derive host/taskid/seen_k/pid, fill defaults, drop unusable urls.
-    mapInPandas — narrow, no shuffle."""
-    n_partitions = cfg.n_partitions
+    derive host/taskid, fill defaults, drop unusable urls in one narrow
+    mapInPandas; seen_k/pid are then JVM columns over its output (every
+    kept row has a non-null project and canon_url)."""
+    norm_schema = StructType(
+        [f for f in UPDATE_SCHEMA.fields if f.name not in ("seen_k", "pid")]
+    )
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -152,10 +172,6 @@ def normalize_updates(raw: DataFrame, cfg: RoundConfig) -> DataFrame:
             pdf["host"] = host_series(cu)
             pdf["taskid"] = taskid_series(cu)
             pdf["project"] = pdf["project"].fillna("test_project")
-            pdf["seen_k"] = [
-                seen_key(p, c) for p, c in zip(pdf["project"], pdf["canon_url"])
-            ]
-            pdf["pid"] = [partition_of(h, n_partitions) for h in pdf["host"]]
             pdf["priority"] = pdf["priority"].fillna(0).astype("int32")
             pdf["exetime"] = pdf["exetime"].fillna(0.0)
             pdf["age"] = pdf["age"].fillna(-1.0)
@@ -163,9 +179,15 @@ def normalize_updates(raw: DataFrame, cfg: RoundConfig) -> DataFrame:
             pdf["auto_recrawl"] = pdf["auto_recrawl"].fillna(False).astype(bool)
             pdf["callback"] = pdf["callback"].fillna("index_page")
             pdf["cancel"] = pdf["cancel"].fillna(False).astype(bool)
-            yield pdf[[f.name for f in UPDATE_SCHEMA.fields]]
+            yield pdf[norm_schema.fieldNames()]
 
-    return ensure_raw_columns(raw).mapInPandas(fn, UPDATE_SCHEMA)
+    return (
+        ensure_raw_columns(raw)
+        .mapInPandas(fn, norm_schema)
+        .withColumn("seen_k", seen_k_col())
+        .withColumn("pid", pid_col(cfg.n_partitions))
+        .select(*UPDATE_SCHEMA.fieldNames())
+    )
 
 
 def collapse_updates(upd: DataFrame) -> DataFrame:

@@ -30,7 +30,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
@@ -96,13 +95,12 @@ def seen_filter_stream(
         state.update((bf.to_bytes(),))
 
     # seen key + pid both JVM-side (no per-row Python): the batch
-    # engine's exact md5("project|canon_url") key (engine/seen.py) and
-    # the byte-identical pid expression (engine/round.py pid_col)
-    from pyspider_spark.engine.round import pid_col
+    # engine's exact expressions (engine/stages.py)
+    from pyspider_spark.engine.stages import pid_col, seen_k_col
 
-    with_key = src.withColumn(
-        "seen_k", F.md5(F.concat_ws("|", "project", "canon_url"))
-    ).withColumn("pid", pid_col(n_partitions))
+    with_key = src.withColumn("seen_k", seen_k_col()).withColumn(
+        "pid", pid_col(n_partitions)
+    )
     return with_key.groupBy("pid").applyInPandasWithState(
         fn, SEEN_OUT, _SEEN_STATE, "append", GroupStateTimeout.NoTimeout
     )

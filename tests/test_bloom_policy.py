@@ -90,63 +90,3 @@ def test_saturated_partition_rebuilds(spark, smoke_fixtures, tmp_path):
         ]
         if keys:
             assert bool(np.all(bf.contains_many(keys)))
-
-
-@pytest.mark.usefixtures("smoke_fixtures")
-def test_legacy_bin_blob_manifest_resumes(spark, smoke_fixtures, tmp_path):
-    """Pre-refactor snapshots persisted blobs as driver-written .bin
-    files ({"bloom": rel, "cuckoo": rel}); _blob_df must lift them
-    identically to the table format so an old state_dir resumes."""
-    import json
-    import os
-
-    cfg = RoundConfig(n_partitions=4, round_budget=1000)
-    eng = CrawlEngine(
-        spark,
-        str(tmp_path / "state"),
-        cfg,
-        pages_path=smoke_fixtures["pages"],
-        projects_path=smoke_fixtures["projects"],
-        robots_path=smoke_fixtures["robots"],
-    )
-    eng.run_rounds(1, seeds=spark.read.parquet(smoke_fixtures["seeds"]))
-    man = eng.snap.read_manifest()
-    table_rows = {
-        r["pid"]: (r["bloom_blob"], r["cuckoo_blob"], r["n_keys"])
-        for r in eng._blob_df(man).collect()
-    }
-    assert table_rows
-
-    # rewrite the manifest to the legacy .bin format
-    blob_dir = eng.snap.blob_dir(int(man["round"]))
-    legacy = {}
-    for pid_s, ent in man["blobs"].items():
-        b, c, n = eng.blob_state(int(pid_s))
-        bp = os.path.join(blob_dir, f"bloom_{int(pid_s):05d}.bin")
-        cp = os.path.join(blob_dir, f"cuckoo_{int(pid_s):05d}.bin")
-        with open(bp, "wb") as f:
-            f.write(b)
-        with open(cp, "wb") as f:
-            f.write(c)
-        legacy[pid_s] = {
-            "bloom": eng.snap.rel(bp),
-            "cuckoo": eng.snap.rel(cp),
-            "n_keys": ent["n_keys"],
-            "capacity": ent["capacity"],
-        }
-    man2 = dict(man)
-    man2["blobs"] = legacy
-    with open(eng.snap.manifest_path(), "w") as f:
-        json.dump(man2, f)
-
-    lifted = {
-        r["pid"]: (bytes(r["bloom_blob"]), bytes(r["cuckoo_blob"]), r["n_keys"])
-        for r in eng._blob_df(eng.snap.read_manifest()).collect()
-    }
-    assert {p: (bytes(b), bytes(c), n) for p, (b, c, n) in table_rows.items()} == lifted
-
-    # and the engine keeps crawling from the legacy snapshot
-    eng.run_rounds(1)
-    man3 = eng.snap.read_manifest()
-    assert int(man3["round"]) == int(man["round"]) + 1
-    assert all(e.get("table") for e in man3["blobs"].values())

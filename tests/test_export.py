@@ -9,6 +9,7 @@ import json
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from pyspider_spark.ops.export import export_corpus, with_shard, with_text_stats
 from pyspider_spark.ops.textstats import analyze_text
@@ -144,3 +145,16 @@ def test_job_cli_mix_and_pack(tmp_path, spark):
     a = sorted(map(tuple, back.select("doc_id", "shard").collect()))
     b = sorted(map(tuple, spark.read.parquet(out2).select("doc_id", "shard").collect()))
     assert a == b
+
+
+@pytest.mark.parametrize("mix", ["en", "en=lots", "en=1.0,de"])
+def test_job_cli_rejects_malformed_mix(tmp_path, capsys, mix):
+    """A malformed --mix token ends in a usage error naming the token,
+    before any Spark work starts."""
+    import jobs.corpus_export as job
+
+    with pytest.raises(SystemExit) as exc:
+        job.main(["--docs", "unused.parquet", "--out", str(tmp_path / "x"), "--mix", mix])
+    assert exc.value.code == 2
+    bad = mix.split(",")[-1]
+    assert f"malformed token {bad!r}" in capsys.readouterr().err

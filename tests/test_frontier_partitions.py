@@ -15,14 +15,18 @@ import pytest
 from pyspider_spark.config import RoundConfig
 from pyspider_spark.engine.frontier import norm_entry
 from pyspider_spark.engine.round import CrawlEngine, pid_col
+from pyspider_spark.engine.stages import normalize_updates, seen_k_col
 from pyspider_spark.kernels.canon import partition_of
+from pyspider_spark.oracle.simulator import seen_key
 
 N_PART = 4
 
 
 def test_pid_col_matches_partition_of(spark):
-    """The JVM-side pid expression is byte-equal to the Python
-    partition_of used by normalize/simulator (same md5-prefix mod)."""
+    """The JVM-side pid and seen-key expressions are byte-equal to the
+    Python partition_of / seen_key the simulator uses (same md5-prefix
+    mod, same md5(project|canon_url)) — directly and as normalize
+    derives them."""
     hosts = ["", "host0.example", "host1.example", "slow.example", "a.b.c", "x"]
     df = spark.createDataFrame([(h,) for h in hosts], "host string")
     got = {
@@ -31,6 +35,19 @@ def test_pid_col_matches_partition_of(spark):
     }
     want = {h: partition_of(h, N_PART) for h in hosts}
     assert got == want
+
+    raw = spark.createDataFrame(
+        [(f"http://{h or 'h'}/p/ü?b=1&a=2", p) for h in hosts for p in ("p0", "test_project")]
+        + [("data:,_on_message|x", "msg_project")],
+        "url string, project string",
+    )
+    norm = normalize_updates(raw, RoundConfig(n_partitions=N_PART))
+    rows = norm.select("project", "canon_url", "host", "seen_k", "pid",
+                       seen_k_col().alias("k2")).collect()
+    assert len(rows) == raw.count()
+    for r in rows:
+        assert r["seen_k"] == r["k2"] == seen_key(r["project"], r["canon_url"])
+        assert r["pid"] == partition_of(r["host"], N_PART)
 
 
 def _mk_fixtures(tmp_path, hosts):

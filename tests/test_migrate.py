@@ -91,7 +91,7 @@ def _host_rows(eng: CrawlEngine) -> set[tuple]:
     man = eng.snap.read_manifest()
     return {
         tuple(r)
-        for r in eng._read_host_state(man, eng._host_state_dirs(man)).collect()
+        for r in eng._read_host_state(eng._host_state_dirs(man)).collect()
     }
 
 

@@ -94,3 +94,47 @@ def test_partial_stage_dir_is_overwritten(spark, smoke_fixtures, tmp_path):
     assert man["round"] == 2
     # frontier reads cleanly (garbage gone)
     assert eng2.frontier().count() > 0
+
+
+def test_failed_round_joins_background_sinks(spark, smoke_fixtures, tmp_path, monkeypatch):
+    """A phase that raises must not leave the round's background writes
+    running: the follows/results/host_state sinks are joined before the
+    error reaches the caller, so a resume never races a detached write
+    into the same rounds/rN dirs."""
+    import threading
+    import time
+
+    from pyspider_spark.engine import frontier as FR
+
+    state = str(tmp_path / "d")
+    eng = _run(spark, smoke_fixtures, state, 1)  # committed seed round
+
+    failed = threading.Event()  # the phase error has been raised
+    follows_done = threading.Event()
+
+    def boom(*a, **k):
+        failed.set()
+        raise RuntimeError("injected frontier_write failure")
+
+    write = eng._write
+
+    def slow_write(df, r, name, *a, **k):
+        if name != "follows":
+            return write(df, r, name, *a, **k)
+        failed.wait(60)  # still writing when the phase fails ...
+        time.sleep(2)
+        rel = write(df, r, name, *a, **k)
+        follows_done.set()  # ... and finished before run_round returns
+        return rel
+
+    monkeypatch.setattr(FR, "append_round_delta", boom)
+    monkeypatch.setattr(eng, "_write", slow_write)
+    with pytest.raises(RuntimeError, match="injected"):
+        eng.run_round(1)
+    assert follows_done.is_set()
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert eng.snap.read_manifest()["round"] == 0
+    monkeypatch.undo()
+
+    eng2 = _run(spark, smoke_fixtures, state, 1, seeds=False)
+    assert eng2.snap.read_manifest()["round"] == 1

@@ -18,8 +18,8 @@ def test_gc_keeps_referenced_rounds(tmp_path):
     snap = SnapshotStore(str(tmp_path))
     for r in range(5):
         _touch(os.path.join(snap.table_dir(r, "frontier"), "part-0.parquet"))
-        _touch(os.path.join(snap.blob_dir(r), f"bloom_{r:05d}.bin"))
-    # manifest references round 4 tables plus a blob pair carried from round 1
+        _touch(os.path.join(snap.table_dir(r, "blobs_tbl"), "part-0.parquet"))
+    # manifest references round 4 tables plus a blob table carried from round 1
     snap.commit(
         {
             "round": 4,
@@ -28,7 +28,7 @@ def test_gc_keeps_referenced_rounds(tmp_path):
                 "results": ["rounds/r000004/results"],
             },
             "blobs": {
-                "1": ["rounds/r000001/blobs/bloom_00001.bin", None],
+                "1": {"table": "rounds/r000001/blobs_tbl", "n_keys": 3, "capacity": 8},
             },
         }
     )
