@@ -1199,7 +1199,7 @@ def q_probe_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F401 (applyInPandas path)
 
     from pyspider_spark.config import RoundConfig
-    from pyspider_spark.engine.round import pid_col
+    from pyspider_spark.engine.stages import pid_col
     from pyspider_spark.engine.seen import probe_and_update
 
     cfg = RoundConfig(n_partitions=4)
@@ -2692,7 +2692,7 @@ def q_seen_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolved away, and a bloom false negative (impossible by
     construction) would surface as an extra row."""
     from pyspider_spark.config import RoundConfig
-    from pyspider_spark.engine.round import pid_col
+    from pyspider_spark.engine.stages import pid_col
     from pyspider_spark.engine.seen import probe_and_update
 
     cfg = RoundConfig(n_partitions=4)

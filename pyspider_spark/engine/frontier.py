@@ -58,9 +58,32 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from pyspider_spark.engine import schema as S
+from pyspider_spark.engine.stages import KEY, bounded_broadcast, pid_col
 
-KEY = ["project", "taskid"]
 FR_COLS = [f.name for f in S.FRONTIER_SCHEMA.fields]
+
+
+def parquet_rows(d: str) -> int:
+    """Row count of a parquet directory from file footers (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(os.path.join(d, fn)).metadata.num_rows
+        for fn in os.listdir(d)
+        if fn.endswith(".parquet")
+    )
+
+
+def pid_dirs(d: str) -> dict[int, str]:
+    """pid -> path of the ``pid=N`` children of a ``partitionBy("pid")``
+    parquet dir, in name order (empty when `d` was never written)."""
+    if not os.path.isdir(d):
+        return {}
+    return {
+        int(name.split("=", 1)[1]): os.path.join(d, name)
+        for name in sorted(os.listdir(d))
+        if name.startswith("pid=")
+    }
 
 
 def norm_entry(v: dict) -> dict:
@@ -109,11 +132,9 @@ def read_resolved(
         .filter((F.col("_rn") == 1) & ~F.col("is_delete"))
         .select(*FR_COLS)
     )
-    from pyspider_spark.engine.round import _parquet_rows
-
-    keys = dd.select(*KEY).distinct()
-    if sum(_parquet_rows(d) for d in deltas) <= broadcast_max_keys:
-        keys = F.broadcast(keys)
+    keys = bounded_broadcast(
+        sum(parquet_rows(d) for d in deltas), broadcast_max_keys
+    )(dd.select(*KEY).distinct())
     return base_df.join(keys, KEY, "left_anti").unionByName(live)
 
 
@@ -138,13 +159,7 @@ def append_round_delta(
 
     delta_rows: dict[int, int] = {}
     new_rows: dict[int, int] = {}
-    if not os.path.isdir(delta_dir):
-        return delta_rows, new_rows
-    for name in sorted(os.listdir(delta_dir)):
-        if not name.startswith("pid="):
-            continue
-        p = int(name.split("=", 1)[1])
-        d = os.path.join(delta_dir, name)
+    for p, d in pid_dirs(delta_dir).items():
         ent = entries.setdefault(p, {"base": None, "deltas": []})
         ent["deltas"] = list(ent["deltas"]) + [snap.rel(d)]
         # one read per pid dir: row count + inserted count off the
@@ -199,8 +214,6 @@ def compact(
     mostly-cold frontier (the 10^10-row design point — almost all rows
     have a far-future ``exetime``) parquet row-group min/max stats then
     skip the never-due mass, making that scan O(due) not O(frontier)."""
-    from pyspider_spark.engine.round import _parquet_rows, pid_col
-
     resolved = read_resolved(
         spark, snap, entries, pids, broadcast_max_keys=broadcast_max_keys
     )
@@ -214,12 +227,9 @@ def compact(
         .parquet(out_dir)
     )
     written: dict[int, int] = {}
-    for name in sorted(os.listdir(out_dir)):
-        if name.startswith("pid="):
-            p = int(name.split("=", 1)[1])
-            d = os.path.join(out_dir, name)
-            written[p] = _parquet_rows(d)
-            entries[p] = {"base": snap.rel(d), "deltas": []}
+    for p, d in pid_dirs(out_dir).items():
+        written[p] = parquet_rows(d)
+        entries[p] = {"base": snap.rel(d), "deltas": []}
     for p in pids:
         if p not in written:
             entries.pop(p, None)  # compacted away (all rows deleted)

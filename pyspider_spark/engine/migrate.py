@@ -39,7 +39,9 @@ from dataclasses import replace
 
 from pyspark.sql import functions as F
 
-from pyspider_spark.engine.seen import rebuild_blooms
+from pyspider_spark.engine.frontier import pid_dirs
+from pyspider_spark.engine.seen import rebuild_blooms, register_blob_table
+from pyspider_spark.engine.stages import pid_col, seen_k_col
 
 
 def migrate_partitions(engine, new_n: int) -> dict:
@@ -50,8 +52,6 @@ def migrate_partitions(engine, new_n: int) -> dict:
     job. On success the engine's config is updated in place and the
     next ``run_round`` continues on the new layout.
     """
-    from pyspider_spark.engine.stages import pid_col, seen_k_col
-
     snap, cfg = engine.snap, engine.cfg
     man = snap.read_manifest()
     if man is None:
@@ -78,13 +78,10 @@ def migrate_partitions(engine, new_n: int) -> dict:
         .partitionBy("pid")
         .parquet(mig_dir)
     )
-    new_dirs: dict[str, dict] = {}
-    for name in sorted(os.listdir(mig_dir)):
-        if name.startswith("pid="):
-            new_dirs[name.split("=", 1)[1]] = {
-                "base": snap.rel(os.path.join(mig_dir, name)),
-                "deltas": [],
-            }
+    new_dirs = {
+        str(p): {"base": snap.rel(d), "deltas": []}
+        for p, d in pid_dirs(mig_dir).items()
+    }
 
     # --- host_state rewrite under the new bucketing (token-bucket rows
     # share the frontier's pid layout for touch-only round rewrites)
@@ -98,10 +95,7 @@ def migrate_partitions(engine, new_n: int) -> dict:
         .partitionBy("pid")
         .parquet(hs_mig_dir)
     )
-    new_hs_dirs: dict[str, str] = {}
-    for name in sorted(os.listdir(hs_mig_dir)):
-        if name.startswith("pid="):
-            new_hs_dirs[name.split("=", 1)[1]] = snap.rel(os.path.join(hs_mig_dir, name))
+    new_hs_dirs = {str(p): snap.rel(d) for p, d in pid_dirs(hs_mig_dir).items()}
 
     # --- bloom rebuild from the authoritative key set, sized per pid
     fr_keys = fr.select(
@@ -128,17 +122,10 @@ def migrate_partitions(engine, new_n: int) -> dict:
         .write.mode("overwrite")
         .parquet(blobs_dir)
     )
-    from pyspider_spark.engine.round import _parquet_pid_nkeys
-
-    blobs_rel = snap.rel(blobs_dir)
-    new_blobs: dict[str, dict] = {
-        str(pid): {
-            "table": blobs_rel,
-            "n_keys": n,
-            "capacity": caps[pid],
-        }
-        for pid, n in _parquet_pid_nkeys(blobs_dir).items()
-    }
+    new_blobs: dict[str, dict] = {}
+    register_blob_table(
+        new_blobs, blobs_dir, snap.rel(blobs_dir), cfg.bloom_expected_keys, caps
+    )
 
     # --- atomic commit: same manifest-rename path as a round
     man2 = dict(man)

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
 from pyspider_spark.config import RoundConfig
-from pyspider_spark.engine.stages import order_cols
+from pyspider_spark.engine.stages import bounded_broadcast, order_cols
 from pyspider_spark.kernels.bucket import refill_scalar
 
 ADMIT_COLS = [
@@ -100,9 +100,9 @@ def check_robots(
     from pyspider_spark.handlers import no_robots_callbacks
 
     exempt_cbs = no_robots_callbacks()
-    dim = robots.select("host", "robots_txt")
-    if robots_rows is not None and robots_rows <= cfg.robots_broadcast_max_rows:
-        dim = F.broadcast(dim)
+    dim = bounded_broadcast(robots_rows, cfg.robots_broadcast_max_rows)(
+        robots.select("host", "robots_txt")
+    )
     j = cands.join(dim, "host", "left")
     # ONE pass, no union split: the UDF short-circuits null robots_txt
     # rows to True inside the Arrow batch. The previous
@@ -234,7 +234,7 @@ def schedule_round(
     project_caps: dict[str, int] | None = None,
     robots_rows: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Full O1/O2/O3/J4/J5 pass. Returns (sched, blocked).
+    """Full O1/O2/O3/J4/J5 pass. Returns (sched, blocked, checked).
 
     sched: the round's fetch schedule — robots-passing, per-host bucket
     admission, per-project budget cap (when `project_caps` given),
@@ -250,7 +250,9 @@ def schedule_round(
     joins, so ReuseExchange can't dedupe them). The first action (the
     round's schedule-log write) builds the cache inside one job; the
     settle job's `blocked` read and the admit branches serve from it.
-    Callers unpersist via the returned handle after the round's sinks.
+    `checked` is returned so the caller can unpersist it: the crawl
+    round registers it with its ``_Round``, which unpersists it when
+    the round returns or raises.
     """
     checked = check_robots(cands, robots, cfg, robots_rows=robots_rows).persist(
         StorageLevel.MEMORY_AND_DISK

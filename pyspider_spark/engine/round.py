@@ -54,10 +54,16 @@ from pyspider_spark.engine import schema as S
 from pyspider_spark.engine import frontier as FR
 from pyspider_spark.engine.fetchx import fetch_and_extract, prepare_pages
 from pyspider_spark.engine.politeness import schedule_round
-from pyspider_spark.engine.seen import probe_and_update, rebuild_blooms
+from pyspider_spark.engine.seen import (
+    BLOB_SCHEMA,
+    probe_and_update,
+    rebuild_blooms,
+    register_blob_table,
+)
 from pyspider_spark.engine.snapshot import SnapshotStore
 from pyspider_spark.engine.stages import (
     KEY,
+    bounded_broadcast,
     candidates_filter,
     order_cols,
     collapse_updates,
@@ -102,33 +108,6 @@ def cron_due_rows(
     return rows, new_state
 
 
-def _parquet_rows(d: str) -> int:
-    """Row count of a parquet directory from file footers (no Spark job)."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.ParquetFile(os.path.join(d, fn)).metadata.num_rows
-        for fn in os.listdir(d)
-        if fn.endswith(".parquet")
-    )
-
-
-def _parquet_value_counts(d: str, column: str) -> dict:
-    """value_counts of one column of a parquet dir, computed in Arrow
-    (no Python-list materialization — ADVICE r1) driver-side."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    out: dict = {}
-    for fn in sorted(os.listdir(d)):
-        if fn.endswith(".parquet"):
-            col = pq.read_table(os.path.join(d, fn), columns=[column])[column]
-            for s in pc.value_counts(col.combine_chunks()):
-                v = s["values"].as_py()
-                out[v] = out.get(v, 0) + s["counts"].as_py()
-    return out
-
-
 def _parquet_group_counts(d: str, cols: list[str]) -> dict[tuple, int]:
     """Grouped row counts over a written parquet dir, computed with
     Arrow group_by driver-side (no Spark job)."""
@@ -145,18 +124,41 @@ def _parquet_group_counts(d: str, cols: list[str]) -> dict[tuple, int]:
     return out
 
 
-def _parquet_pid_nkeys(d: str) -> dict[int, int]:
-    """(pid -> n_keys) of a written blobs table, via a two-small-column
-    pyarrow read — blob BYTES stay on disk (≤ n_partitions rows)."""
-    import pyarrow.parquet as pq
+class _Round:
+    """One crawl round's lifecycle: its background pool, the frames it
+    caches and its phase clock.
 
-    out: dict[int, int] = {}
-    for fn in sorted(os.listdir(d)):
-        if fn.endswith(".parquet"):
-            t = pq.read_table(os.path.join(d, fn), columns=["pid", "n_keys"])
-            for row in t.to_pylist():
-                out[int(row["pid"])] = int(row["n_keys"] or 0)
-    return out
+    The round's five background jobs (blob-table write, concurrent
+    fold, follows/results/host_state sinks) share ONE pool, and
+    :meth:`close` — run when the round returns or raises — joins it
+    first: when a phase fails, no Spark write outlives the round to race
+    the resume that overwrites the same ``rounds/rN`` dirs, and the
+    phase error wins over any background failure. Then it unpersists
+    every frame the round cached, so a failed round leaves no cached
+    data behind either."""
+
+    def __init__(self) -> None:
+        self.pool = ThreadPoolExecutor(max_workers=5)
+        self.cached: list[DataFrame] = []
+        self.phase_s: dict[str, float] = {}
+        self.t_start = self._t = time.perf_counter()
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """Cache `df` until the round ends."""
+        self.cached.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+        return df
+
+    def mark(self, phase: str) -> None:
+        """End `phase`: its wall time runs from the previous mark (or
+        the round start), so the phases tile the round."""
+        t = time.perf_counter()
+        self.phase_s[phase] = round(t - self._t, 3)
+        self._t = t
+
+    def close(self) -> None:
+        self.pool.shutdown(wait=True, cancel_futures=True)
+        for df in self.cached:
+            df.unpersist()
 
 
 class CrawlEngine:
@@ -215,7 +217,7 @@ class CrawlEngine:
         # pre-extraction payload exchange is pure cost (fetchx)
         try:
             if os.path.isdir(pages_path):
-                self.pages_rows: int | None = _parquet_rows(pages_path) or None
+                self.pages_rows: int | None = FR.parquet_rows(pages_path) or None
             else:
                 import pyarrow.parquet as _pq
 
@@ -242,7 +244,7 @@ class CrawlEngine:
         index instead of serving a stale one (ADVICE r1)."""
         try:
             mtime = os.path.getmtime(pages_path)
-            rows = _parquet_rows(pages_path) if os.path.isdir(pages_path) else -1
+            rows = FR.parquet_rows(pages_path) if os.path.isdir(pages_path) else -1
         except OSError:
             mtime, rows = -1.0, -1
         return f"{pages_path}|{mtime}|{rows}"
@@ -273,7 +275,7 @@ class CrawlEngine:
         # footer row count drives the bounded-broadcast decision in
         # check_robots; unknown (non-dir layout) ⇒ no forced broadcast
         try:
-            self.robots_rows: int | None = _parquet_rows(self.robots_path)
+            self.robots_rows: int | None = FR.parquet_rows(self.robots_path)
         except OSError:
             self.robots_rows = None
 
@@ -511,8 +513,6 @@ class CrawlEngine:
         bytes transiting the driver: manifest entries (``{"table":
         rel}``) group into per-table parquet scans filtered to the pids
         each table still owns."""
-        from pyspider_spark.engine.seen import BLOB_SCHEMA
-
         by_table: dict[str, list[int]] = {}
         for pid, ent in ((man or {}).get("blobs") or {}).items():
             by_table.setdefault(ent["table"], []).append(int(pid))
@@ -556,8 +556,6 @@ class CrawlEngine:
         cuckoo shadows carried over by a pid join, the result written
         DISTRIBUTED as a blobs table (no bytes through the driver).
         Mutates blob_meta; returns the updated blob DataFrame."""
-        from pyspider_spark.engine.seen import BLOB_SCHEMA
-
         cfg = self.cfg
         saturated = [
             int(p)
@@ -585,11 +583,9 @@ class CrawlEngine:
         )
         out_dir = self.snap.table_dir(r, "blobs_rebuilt")
         rebuilt.write.mode("overwrite").parquet(out_dir)
-        rel = self.snap.rel(out_dir)
-        for pid, n in _parquet_pid_nkeys(out_dir).items():
-            ent = dict(blob_meta.get(str(pid), {}))
-            ent.update(table=rel, n_keys=n, capacity=caps[pid])
-            blob_meta[str(pid)] = ent
+        register_blob_table(
+            blob_meta, out_dir, self.snap.rel(out_dir), cfg.bloom_expected_keys, caps
+        )
         return (
             blob_df.filter(~F.col("pid").isin(saturated)).unionByName(
                 self.spark.read.schema(BLOB_SCHEMA).parquet(out_dir)
@@ -624,32 +620,16 @@ class CrawlEngine:
 
     # ---- one round ----------------------------------------------------------
     def run_round(self, r: int, inject: DataFrame | None = None) -> dict:
-        """One crawl round. Its five background jobs (blob-table write,
-        concurrent fold, follows/results/host_state sinks) share ONE
-        pool that is joined before the round returns or raises: when a
-        phase fails, no Spark write outlives the round to race the
-        resume that overwrites the same ``rounds/rN`` dirs, and the
-        phase error wins over any background failure."""
-        pool = ThreadPoolExecutor(max_workers=5)
+        """One crawl round; :class:`_Round` owns its lifecycle."""
+        rc = _Round()
         try:
-            return self._run_round_impl(r, inject, pool)
+            return self._run_round_impl(r, inject, rc)
         finally:
-            pool.shutdown(wait=True, cancel_futures=True)
+            rc.close()
 
-    def _run_round_impl(
-        self, r: int, inject: DataFrame | None, pool: ThreadPoolExecutor
-    ) -> dict:
+    def _run_round_impl(self, r: int, inject: DataFrame | None, rc: _Round) -> dict:
         cfg, snap, spark = self.cfg, self.snap, self.spark
         now = cfg.now(r)
-        t_start = time.time()
-        phase_s: dict[str, float] = {}
-        _t = [t_start]
-
-        def mark(name: str) -> None:
-            t = time.time()
-            phase_s[name] = round(t - _t[0], 3)
-            _t[0] = t
-
         man = snap.read_manifest()
         state = (man or {}).get("state", {})
         stored_n = state.get("n_partitions")
@@ -713,15 +693,13 @@ class CrawlEngine:
 
         # persist: cancels/probe/merge all branch off this pipeline — the
         # normalize (Python mapInPandas) must run once.
-        upd_all = normalize_updates(raw, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+        upd_all = rc.persist(normalize_updates(raw, cfg))
         cancels = upd_all.filter(F.col("cancel")).dropDuplicates(["seen_k"])
         # A4 collapse feeds ONLY the merge — built lazily here, it
         # materializes inside the merge staging write over the warm
         # upd_all cache, off the probe critical path (the probe needs
         # just the distinct key set, below).
-        upd = collapse_updates(upd_all.filter(~F.col("cancel"))).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        upd = rc.persist(collapse_updates(upd_all.filter(~F.col("cancel"))))
         # Materialize the normalize cache NOW with one action: the probe
         # write below unions two branches (cancels ∪ keys) that both
         # scan upd_all — against a COLD cache, AQE materializes each
@@ -771,17 +749,11 @@ class CrawlEngine:
                 .write.mode("overwrite")
                 .parquet(blobs_dir)
             )
-            blobs_rel = snap.rel(blobs_dir)
-            for pid, n in _parquet_pid_nkeys(blobs_dir).items():
-                ent = dict(blob_meta.get(str(pid), {}))
-                ent.update(
-                    table=blobs_rel,
-                    n_keys=n,
-                    capacity=ent.get("capacity", cfg.bloom_expected_keys),
-                )
-                blob_meta[str(pid)] = ent
+            register_blob_table(
+                blob_meta, blobs_dir, snap.rel(blobs_dir), cfg.bloom_expected_keys
+            )
 
-        f_blobs = pool.submit(_write_blobs_tbl)
+        f_blobs = rc.pool.submit(_write_blobs_tbl)
         # ONE Arrow pass over (pid, cancel): the update-touched
         # partition set and the cancel totals (reused by the rare
         # cancel-lineage recompute below)
@@ -799,7 +771,7 @@ class CrawlEngine:
         n_upd = cancel_counts.get(False, 0)
 
         probe_df = spark.read.parquet(probe_abs).filter(F.col("taskid").isNotNull())
-        mark("normalize_probe")
+        rc.mark("normalize_probe")
 
         # --- merge (steps 0-1), merge-on-read: compute only the rows
         # this round CHANGES (inserts, bloom-FP inserts, P4 restarts) —
@@ -807,9 +779,9 @@ class CrawlEngine:
         # streamed against the broadcast update batch, never rewritten.
         fr_res_t = self._read_frontier(fr_dirs, touched_u)
         if had_cancels:
-            ck = cancels.select(*KEY)
-            if cancel_counts.get(True, 0) <= cfg.merge_broadcast_max_rows:
-                ck = F.broadcast(ck)
+            ck = bounded_broadcast(
+                cancel_counts.get(True, 0), cfg.merge_broadcast_max_rows
+            )(cancels.select(*KEY))
             fr_res_t = fr_res_t.join(ck, KEY, "left_anti")
         merge_out = merge_frontier_delta(
             fr_res_t, upd, probe_df.filter(~F.col("cancel")), now, r, cfg,
@@ -828,19 +800,16 @@ class CrawlEngine:
         # survives executor loss on a real cluster.
         merge_abs = snap.abspath(self._write(merge_out, r, "merge"))
         mdelta = spark.read.schema(S.FRONTIER_MERGE_SCHEMA).parquet(merge_abs)
-        n_merge = _parquet_rows(merge_abs)
+        n_merge = FR.parquet_rows(merge_abs)
         # changed-rows batches are broadcast into the frontier-scan
         # joins only under the bound (10^8-row rounds must not be
         # force-collected); above it AQE picks from observed sizes.
         # (settle-side joins get their own bound from n_sched below —
         # a scheduled row need not be a merge-changed row.)
-        n_changed = n_merge + cancel_counts.get(True, 0)
-        mb = (
-            F.broadcast
-            if n_changed <= cfg.merge_broadcast_max_rows
-            else (lambda df: df)
+        mb = bounded_broadcast(
+            n_merge + cancel_counts.get(True, 0), cfg.merge_broadcast_max_rows
         )
-        mark("merge")
+        rc.mark("merge")
         fr_cols = FR.FR_COLS
         # post-merge view = resolved frontier ⊖ (changed ∪ cancelled
         # keys) ⊕ changed rows; the anti side is changed-rows-bound ⇒
@@ -887,8 +856,8 @@ class CrawlEngine:
             cands, self.robots, host_state, cfg, now,
             project_caps=project_caps, robots_rows=self.robots_rows,
         )
-        sched = sched.persist(StorageLevel.MEMORY_AND_DISK)
-        blocked = blocked.persist(StorageLevel.MEMORY_AND_DISK)
+        sched, blocked = rc.persist(sched), rc.persist(blocked)
+        rc.cached.append(checked)  # persisted by schedule_round
 
         # per-host deterministic sequence for the schedule log (the
         # crawl-order artifact the equivalence gate checks). Written
@@ -915,13 +884,13 @@ class CrawlEngine:
         # from the schedule footers, mirrored by the simulator; the
         # schedule size (fetch-join broadcast bound) is their sum —
         # one Arrow pass for both.
-        proj_counts = _parquet_value_counts(snap.abspath(sched_rel), "project")
+        proj_counts = _parquet_group_counts(snap.abspath(sched_rel), ["project"])
         n_sched = sum(proj_counts.values())
         proj_buckets_next = dict(proj_buckets)
-        for name, cnt in proj_counts.items():
+        for (name,), cnt in proj_counts.items():
             if name in proj_tok and cnt > 0:
                 proj_buckets_next[name] = (proj_tok[name] - cnt, now)
-        mark("schedule")
+        rc.mark("schedule")
 
         # --- concurrent compaction (Iceberg rewrite_data_files analog):
         # folds the PRE-round bases+deltas of the due partitions while
@@ -935,11 +904,8 @@ class CrawlEngine:
         comp_ents: dict[int, dict] = {}
         if pre_due:
             # compact() mutates its entries map — hand it a private copy
-            comp_ents = {
-                p: {"base": e["base"], "deltas": list(e["deltas"])}
-                for p, e in fr_dirs.items()
-            }
-            comp_fut = pool.submit(
+            comp_ents = {p: FR.norm_entry(e) for p, e in fr_dirs.items()}
+            comp_fut = rc.pool.submit(
                 FR.compact,
                 spark,
                 snap,
@@ -985,12 +951,10 @@ class CrawlEngine:
         # production rounds it's cluster-wide cache pressure for bytes
         # nobody reads. Full text lands in sinks only where a sink
         # explicitly asks (debug_one, corpus jobs run their own plans).
-        fetched = (
+        fetched = rc.persist(
             fx_out.withColumn(
                 "text_len", F.length(F.coalesce("text", F.lit("")))
-            )
-            .drop("text")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            ).drop("text")
         )
         # proc_ok, not raw code: @catch_status_code_error callbacks
         # settle SUCCESS from the handler outcome (U3). 304 rows
@@ -1149,20 +1113,15 @@ class CrawlEngine:
             .otherwise(F.lit("fail"))
             .alias("kind"),
         )
+        # robots BAD: the columns it leaves out union in as NULL
         settle_bad = blocked.select(
             *KEY,
             spid,
-            F.lit(None).cast("string").alias("track"),
             F.lit(BAD).alias("new_status"),
-            F.lit(None).cast("double").alias("new_exetime"),
-            F.lit(None).cast("int").alias("new_retries_left"),
-            F.lit(None).cast("double").alias("new_lastcrawltime"),
             F.lit(False).alias("validators_fresh"),
-            F.lit(None).cast("string").alias("new_etag"),
-            F.lit(None).cast("string").alias("new_last_modified"),
             F.lit("blocked").alias("kind"),
         )
-        settle = settle_of.unionByName(settle_bad)
+        settle = settle_of.unionByName(settle_bad, allowMissingColumns=True)
 
         # The settle write runs ALONE first: it is the job that
         # materializes the fetch+extract pipeline into the `fetched`
@@ -1175,8 +1134,8 @@ class CrawlEngine:
         # follows/results read the now-warm `fetched` cache and don't
         # need the settle footers — start them before the driver's
         # Arrow pass so the footer read overlaps executor work
-        f_follows = pool.submit(self._write, new_follows, r, "follows")
-        f_results = pool.submit(self._write, results, r, "results")
+        f_follows = rc.pool.submit(self._write, new_follows, r, "follows")
+        f_results = rc.pool.submit(self._write, results, r, "results")
         # ONE Arrow pass over (project, kind, pid): totals for the
         # metrics row, the A2 per-project counter table, the P6
         # exception-burst detector, AND the touched-partition set for
@@ -1197,7 +1156,7 @@ class CrawlEngine:
                 and p["status"] in SCHEDULABLE
             ):
                 paused.add(name)
-        mark("fetch_settle")
+        rc.mark("fetch_settle")
 
         # remaining sinks: cache-served concurrent jobs (fetched and
         # mdelta are warm now)
@@ -1217,13 +1176,10 @@ class CrawlEngine:
                 .partitionBy("pid")
                 .parquet(d)
             )
-            m: dict[int, str] = dict(carried)
-            for name in sorted(os.listdir(d)):
-                if name.startswith("pid="):
-                    m[int(name.split("=", 1)[1])] = snap.rel(os.path.join(d, name))
+            m = {**carried, **{p: snap.rel(x) for p, x in FR.pid_dirs(d).items()}}
             return {str(p): rel for p, rel in sorted(m.items())}
 
-        f_host = pool.submit(_write_host_state_merge)
+        f_host = rc.pool.submit(_write_host_state_merge)
 
         # --- frontier delta write (merge-on-read): ONE small delta dir
         # holding only this round's changed rows — post-merge full rows
@@ -1237,11 +1193,7 @@ class CrawlEngine:
         # sched ⊂ cands ⊂ fr2)
         # settle-side joins: bounded like the merge side, from the
         # schedule footer count (every scheduled row settles)
-        msb = (
-            F.broadcast
-            if n_sched <= cfg.merge_broadcast_max_rows
-            else (lambda df: df)
-        )
+        msb = bounded_broadcast(n_sched, cfg.merge_broadcast_max_rows)
         view_sp = (
             self._read_frontier(fr_dirs, sorted(settle_pids))
             .join(mb(anti_keys), KEY, "left_anti")
@@ -1389,72 +1341,58 @@ class CrawlEngine:
                     live[p] = n
         live = {p: n for p, n in live.items() if p in entries}
         tables["frontier"] = {str(p): entries[p] for p in sorted(entries)}
-        mark("frontier_write")
+        rc.mark("frontier_write")
 
-        # --- drain the concurrent sinks
+        # --- drain the concurrent sinks; per-round tables accumulate
+        def add(name: str, rel: str) -> None:
+            tables[name] = list(tables.get(name, [])) + [rel]
+
         tables["follows"] = f_follows.result()
         tables["host_state"] = f_host.result()
         tables["probe"] = probe_rel
-        tables.setdefault("results", [])
-        tables["results"] = list(tables["results"]) + [f_results.result()]
-        tables.setdefault("schedule", [])
-        tables["schedule"] = list(tables["schedule"]) + [sched_rel]
-        tables.setdefault("settle", [])
-        tables["settle"] = list(tables["settle"]) + [settle_rel]
+        add("results", f_results.result())
+        add("schedule", sched_rel)
+        add("settle", settle_rel)
 
         # --- counts from written artifacts (driver-side, no Spark jobs)
-        n_frontier = sum(live.values())
-        n_ok = kind_counts.get("ok", 0)
-        # processor exceptions count as failures (on_task_failed path)
-        n_fail = kind_counts.get("fail", 0) + kind_counts.get("err", 0)
-        n_blocked = kind_counts.get("blocked", 0)
-        # inserted keys are counted exactly by the delta's is_new flag
-        # (a key is inserted iff the seen probe admitted it as new)
-        n_new = sum(ins_rows.values())
+        counts = {
+            "scheduled": n_sched,
+            "ok": kind_counts.get("ok", 0),
+            # processor exceptions count as failures (on_task_failed path)
+            "failed": kind_counts.get("fail", 0) + kind_counts.get("err", 0),
+            "robots_blocked": kind_counts.get("blocked", 0),
+            # inserted keys are counted exactly by the delta's is_new
+            # flag (a key is inserted iff the seen probe admitted it)
+            "new_urls": sum(ins_rows.values()),
+            "frontier": sum(live.values()),
+        }
+        # migration signal: when the largest partition outgrows the
+        # design point, run migrate_partitions
+        pid_max = max(live.values(), default=0)
 
         # metrics tables are a handful of rows — written driver-side
         # with pyarrow (schema matches the Spark StructTypes so
         # spark.read.parquet over round files unions cleanly); zero
         # Spark jobs spent on metrics.
-        wall = time.time() - t_start
-        tables.setdefault("metrics", [])
-        tables["metrics"] = list(tables["metrics"]) + [
-            self._write_driver(
-                [
-                    {
-                        "round": r,
-                        "scheduled": n_sched,
-                        "ok": n_ok,
-                        "failed": n_fail,
-                        "robots_blocked": n_blocked,
-                        "new_urls": n_new,
-                        "frontier": n_frontier,
-                        "wall_s": wall,
-                    }
-                ],
-                S.METRICS_SCHEMA,
-                r,
-                "metrics",
-            )
-        ]
+        wall = time.perf_counter() - rc.t_start
+        add("metrics", self._write_driver(
+            [{"round": r, **counts, "wall_s": wall}], S.METRICS_SCHEMA, r, "metrics"
+        ))
         # A2 — per-project counters (libs/counter.py analog): one row
         # per (round, project, kind) at the round's logical time; the
         # 5m/1h/1d windows are a rollup over this table
         # (engine/results.py — project_window_counts).
         if pk_counts:
-            tables.setdefault("metrics_project", [])
-            tables["metrics_project"] = list(tables["metrics_project"]) + [
-                self._write_driver(
-                    [
-                        {"round": r, "project": proj, "kind": kind,
-                         "cnt": int(cnt), "now": now}
-                        for (proj, kind), cnt in sorted(pk_counts.items())
-                    ],
-                    S.METRICS_PROJECT_SCHEMA,
-                    r,
-                    "metrics_project",
-                )
-            ]
+            add("metrics_project", self._write_driver(
+                [
+                    {"round": r, "project": proj, "kind": kind,
+                     "cnt": int(cnt), "now": now}
+                    for (proj, kind), cnt in sorted(pk_counts.items())
+                ],
+                S.METRICS_PROJECT_SCHEMA,
+                r,
+                "metrics_project",
+            ))
 
         f_blobs.result()  # blob_meta complete before it is committed
         snap.commit(
@@ -1482,33 +1420,16 @@ class CrawlEngine:
                         str(p): n for p, n in sorted(delta_tot.items()) if n
                     },
                     "compacted_pids": compacted,
-                    "counts": {
-                        "scheduled": n_sched,
-                        "ok": n_ok,
-                        "failed": n_fail,
-                        "robots_blocked": n_blocked,
-                        "new_urls": n_new,
-                        "frontier": n_frontier,
-                        # migration signal: when the largest partition
-                        # outgrows the design point, run migrate_partitions
-                        "frontier_pid_max": max(live.values(), default=0),
-                    },
+                    "counts": {**counts, "frontier_pid_max": pid_max},
                 },
             }
         )
-        mark("sinks_commit")
-        for df in (sched, blocked, checked, fetched, upd_all, upd):
-            df.unpersist()
+        rc.mark("sinks_commit")
         return {
-            "phase_s": phase_s,
+            "phase_s": rc.phase_s,
             "round": r,
-            "scheduled": n_sched,
-            "ok": n_ok,
-            "failed": n_fail,
-            "robots_blocked": n_blocked,
-            "new_urls": n_new,
-            "frontier": n_frontier,
-            "frontier_pid_max": max(live.values(), default=0),
+            **counts,
+            "frontier_pid_max": pid_max,
             "wall_s": wall,
         }
 

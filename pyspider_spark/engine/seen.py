@@ -97,6 +97,25 @@ def blobs_df_of(spark, prev: dict[int, tuple[bytes | None, bytes | None, int]]):
     return spark.createDataFrame(rows, BLOB_SCHEMA)
 
 
+def register_blob_table(
+    blob_meta: dict, d: str, rel: str, default_cap: int,
+    caps: dict[int, int] | None = None,
+) -> None:
+    """Point every pid of the blobs table written at `d` (manifest path
+    `rel`) at that table in the manifest ``blobs`` map `blob_meta`.
+    ``n_keys`` comes from a two-small-column pyarrow read — blob BYTES
+    stay on disk (≤ n_partitions rows); ``capacity`` is ``caps[pid]``
+    when given, else the entry's previous capacity, else `default_cap`."""
+    import pyarrow.parquet as pq
+
+    for row in pq.read_table(d, columns=["pid", "n_keys"]).to_pylist():
+        pid = int(row["pid"])
+        ent = dict(blob_meta.get(str(pid), {}))
+        cap = (caps or {}).get(pid, ent.get("capacity", default_cap))
+        ent.update(table=rel, n_keys=int(row["n_keys"] or 0), capacity=cap)
+        blob_meta[str(pid)] = ent
+
+
 def probe_and_update(
     updates: DataFrame,
     prev_blobs,

@@ -13,7 +13,7 @@ the join resolves FPs back to inserts (SURVEY §2.3 J2).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -46,6 +46,16 @@ def seen_k_col() -> Column:
     the JVM twin of ``oracle.simulator.seen_key`` (pinned by
     tests/test_frontier_partitions.py)."""
     return F.md5(F.concat_ws("|", "project", "canon_url"))
+
+
+def bounded_broadcast(rows: int | None, bound: int) -> Callable[[DataFrame], DataFrame]:
+    """``F.broadcast`` when a join side's known row count fits `bound`,
+    else the identity: an unknown or oversized side (10^8-row rounds)
+    must not be force-collected — AQE picks the strategy from observed
+    sizes instead."""
+    if rows is not None and rows <= bound:
+        return F.broadcast
+    return lambda df: df
 
 
 def order_cols() -> list[Column]:
@@ -305,8 +315,7 @@ def merge_frontier_delta(
     batch (10^8-row rounds at the 10^10 design point) must not be
     force-collected past the driver/broadcast limits — without the
     hint AQE picks the strategy from observed sizes."""
-    bound = upd_rows is not None and upd_rows <= cfg.merge_broadcast_max_rows
-    mb = F.broadcast if bound else (lambda df: df)
+    mb = bounded_broadcast(upd_rows, cfg.merge_broadcast_max_rows)
     upd = upd.join(probe.select(*KEY, "seen"), KEY, "inner")
     new_inserts = upd.filter(~F.col("seen")).select(_insert_cols(now, rnd, cfg))
     seen_upd = upd.filter(F.col("seen"))

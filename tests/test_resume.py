@@ -17,10 +17,14 @@ from pyspider_spark.engine.round import CrawlEngine
 
 ROUNDS = 4
 CFG = RoundConfig(n_partitions=4, round_budget=1000)
+PHASES = [
+    "normalize_probe", "merge", "schedule",
+    "fetch_settle", "frontier_write", "sinks_commit",
+]
 
 
-def _run(spark, fixtures, state_dir, rounds, seeds=True):
-    eng = CrawlEngine(
+def _engine(spark, fixtures, state_dir):
+    return CrawlEngine(
         spark,
         state_dir,
         CFG,
@@ -28,6 +32,15 @@ def _run(spark, fixtures, state_dir, rounds, seeds=True):
         projects_path=fixtures["projects"],
         robots_path=fixtures["robots"],
     )
+
+
+def _persisted(spark) -> set:
+    """Ids of the RDDs the Spark session holds persisted."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _run(spark, fixtures, state_dir, rounds, seeds=True):
+    eng = _engine(spark, fixtures, state_dir)
     sdf = spark.read.parquet(fixtures["seeds"]) if seeds else None
     eng.run_rounds(rounds, seeds=sdf)
     return eng
@@ -100,7 +113,9 @@ def test_failed_round_joins_background_sinks(spark, smoke_fixtures, tmp_path, mo
     """A phase that raises must not leave the round's background writes
     running: the follows/results/host_state sinks are joined before the
     error reaches the caller, so a resume never races a detached write
-    into the same rounds/rN dirs."""
+    into the same rounds/rN dirs. Nor may it leave the frames it cached
+    persisted. (The session is shared, so frames other tests left
+    persisted are excluded by comparing against the set before.)"""
     import threading
     import time
 
@@ -108,6 +123,7 @@ def test_failed_round_joins_background_sinks(spark, smoke_fixtures, tmp_path, mo
 
     state = str(tmp_path / "d")
     eng = _run(spark, smoke_fixtures, state, 1)  # committed seed round
+    before = _persisted(spark)
 
     failed = threading.Event()  # the phase error has been raised
     follows_done = threading.Event()
@@ -134,7 +150,12 @@ def test_failed_round_joins_background_sinks(spark, smoke_fixtures, tmp_path, mo
     assert follows_done.is_set()
     assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
     assert eng.snap.read_manifest()["round"] == 0
+    assert _persisted(spark) - before == set()
     monkeypatch.undo()
 
-    eng2 = _run(spark, smoke_fixtures, state, 1, seeds=False)
-    assert eng2.snap.read_manifest()["round"] == 1
+    m = _engine(spark, smoke_fixtures, state).run_round(1)
+    assert m["round"] == 1 and eng.snap.read_manifest()["round"] == 1
+    assert _persisted(spark) - before == set()
+    # the phase clock crawlbench rebuilds its stage windows from
+    assert list(m["phase_s"]) == PHASES
+    assert all(v >= 0 for v in m["phase_s"].values())
