@@ -1,26 +1,30 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract + scaling evidence).
+"""Benchmark harness: the driver's contract suite and one crawl leg.
 
-Default mode — run by the driver per round — times every contract query
-from ``pyspider_spark.contract`` plus a 3-round crawl of a synthetic
-web derived from the sf dir's ``orders`` table, and prints ONE JSON
-line::
+Driver mode (the default) times every contract query from
+``pyspider_spark.contract`` plus a 3-round crawl of a synthetic web
+derived from the sf dir's ``orders`` table, and prints ONE JSON line::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {...}, "sf": 0.1, ...}
+     "queries": {...}, "sf": 0.1, "cores": 32, "crawl": {...}}
 
-Inputs come from ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1)
-on ``local[$SPARK_GRAFT_CPUS]``.
+Inputs come from ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1);
+the session runs on ``local[$SPARK_GRAFT_CPUS]`` (or every CPU when
+that is unset), and ``cores`` reports the session's real width.
 
-Scaling mode (``--scaling``) — the sandbox substitute for the north
-rule's N→4N-executor criterion: runs the SAME crawl job on the SAME
-input in fresh subprocesses at ``local[8]`` and ``local[32]`` and
-reports throughput at both plus efficiency = (T8/T32)/4.
+Crawl-leg mode (``--crawl-only``) runs only the crawl. With
+``--executors N`` it runs on ``local-cluster[N,4,*]``: real executor
+JVMs that import the engine from the ``--py-files`` zip
+(``scripts/make_dist.py``). The north rule's N -> 4N pair is two
+invocations of that leg on the same input::
+
+    python bench.py --crawl-only --executors 1 --rounds 3
+    python bench.py --crawl-only --executors 4 --rounds 3
 
 Usage:
     python bench.py                    # driver mode, one JSON line
-    python bench.py --scaling          # local[8] vs local[32] report
-    python bench.py --crawl-only --cores 8   # one crawl leg (subprocess)
+    python bench.py --crawl-only       # crawl only, local[cores]
+    python bench.py --queries-only     # contract suite only
 """
 
 from __future__ import annotations
@@ -29,7 +33,6 @@ import argparse
 import json
 import os
 import shutil
-import subprocess
 import sys
 import time
 
@@ -51,43 +54,16 @@ def _sf_of(sf_dir: str) -> float:
         return -1.0
 
 
-def _spark(cores: int, executors: int | None = None):
-    from pyspider_spark.engine.session import get_spark
-
-    if executors is None:
-        # bench recipe pins the big local-mode heap (the sandbox has
-        # 125 GB; library default derives a smaller one from MemAvailable)
-        os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
-
-    # shuffle partitions FIXED across parallelism levels: the north rule
-    # ships one artifact unchanged at N and 4N executors, and partition
-    # count is a property of the data size, not the cluster size —
-    # scaling it with cores would quadruple per-stage task overhead on
-    # the bigger cluster and corrupt the efficiency measurement.
-    name = (
-        f"bench_cluster{executors}x4" if executors is not None else f"bench_local{cores}"
-    )
-    return get_spark(
-        cores=cores,
-        shuffle_partitions=64,
-        app_name=name,
-        n_executors=executors,
-    )
-
-
 def ensure_fixtures(
     spark, sf_dir: str, mult: int = 1, page_words: int = 30, seeds_div: int = 30
 ) -> str:
     """Synthesize (once, cached) the bench web for this sf dir. Seed
-    count scales with the keyspace so round sizes reach ~10^5 at sf0.1
-    (BASELINE.md protocol: one round ≥ 30 s at local[8]); ``mult``
-    multiplies the keyspace. ``seeds_div`` sets round density
-    (seeds = keys/seeds_div): the default sparse regime for the driver
-    bench, a dense regime (seeds_div≈5, rounds of ~10^6 URLs) for the
-    scaling measurement — the 10^10-URL design point runs rounds of
-    10^7-10^8 URLs, i.e. a far larger schedule:corpus ratio than the
-    sparse sandbox default, and in the sparse regime per-round fixed
-    latency dominates and no engine's scaling is visible."""
+    count scales with the keyspace so round sizes reach ~10^5 at sf0.1;
+    ``mult`` multiplies the keyspace. ``seeds_div`` sets round density
+    (seeds = keys/seeds_div): the default is the sparse regime of the
+    driver bench; a small divisor (≈5) spreads the seeds over the
+    keyspace for dense rounds whose follow frontier stays mostly
+    unseen."""
     import pyarrow.parquet as pq
 
     n_keys = pq.ParquetFile(os.path.join(sf_dir, "orders.parquet")).metadata.num_rows * mult
@@ -137,6 +113,11 @@ def run_queries(spark, sf_dir: str) -> dict[str, float]:
     plan including all columns — no count()-style column pruning)."""
     from pyspider_spark.contract import build_queries
 
+    # untimed warm-up (scan, shuffle, aggregate) so the first timed
+    # query does not absorb the session's first-job cost
+    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+    nation.groupBy("n_regionkey").count().write.format("noop").mode("overwrite").save()
+
     times: dict[str, float] = {}
     for name, fn in build_queries().items():
         t = time.time()
@@ -156,44 +137,13 @@ def run_crawl(
     rounds: int = CRAWL_ROUNDS,
     mult: int = 1,
     host_rate: float | None = None,
-    bucketed: bool = False,
-    broadcast_rows: int | None = None,
 ) -> dict:
     """Fresh-state crawl of `rounds` rounds; returns wall + URL totals.
-    ``host_rate`` overrides the per-host token rate/burst — the dense
-    scaling bench uses it to bound round size INSIDE the salted
-    politeness pass (scales with cores) instead of a global TakeOrdered
-    budget cut (single-reducer at 10^6-row budgets). ``bucketed``
-    ingests the pages table into the canon_url-bucketed layout (once,
-    cached beside the fixture) and forces the broadcast bound to zero —
-    measuring the co-located sort-merge fetch path the engine plans
-    past broadcastable schedule sizes (engine/ingest.py)."""
+    ``host_rate`` overrides the per-host token rate/burst, bounding
+    round size inside the salted politeness pass (which scales with
+    cores) instead of a global budget cut."""
     from pyspider_spark.config import RoundConfig
     from pyspider_spark.engine.round import CrawlEngine
-
-    pages_path = os.path.join(fixtures_dir, "pages.parquet")
-    cfg_kw: dict = {}
-    if bucketed:
-        from pyspider_spark.engine.ingest import ingest_pages, is_bucketed
-
-        bloc = os.path.join(fixtures_dir, "pages_bucketed")
-        if not is_bucketed(bloc):
-            t0 = time.time()
-            ingest_pages(spark, pages_path, bloc, n_buckets=64, precanonical=True)
-            print(
-                json.dumps({"ingest_bucketed_s": round(time.time() - t0, 1)}),
-                file=sys.stderr,
-            )
-        pages_path = bloc
-        cfg_kw["fetch_broadcast_max_rows"] = 0
-    if broadcast_rows is not None:
-        # experiment knob: cap BOTH broadcast bounds (0 = always take
-        # the shuffle-join path — the at-scale plan; broadcast cost on
-        # an N-executor cluster is O(N x build size), so the bench
-        # regime's multi-100MB schedule broadcasts anti-scale with
-        # executors in a way thread-mode local[k] never shows)
-        cfg_kw["fetch_broadcast_max_rows"] = broadcast_rows
-        cfg_kw["merge_broadcast_max_rows"] = broadcast_rows
 
     state = os.path.join(fixtures_dir, f"state_{os.getpid()}")
     shutil.rmtree(state, ignore_errors=True)
@@ -204,13 +154,12 @@ def run_crawl(
         round_budget=None,
         analyze=True,  # per-page analysis is part of the measured pipeline
         pages_precanonical=True,  # webgen emits canonical urls (ingest-time column)
-        **cfg_kw,
     )
     eng = CrawlEngine(
         spark,
         state,
         cfg,
-        pages_path=pages_path,
+        pages_path=os.path.join(fixtures_dir, "pages.parquet"),
         projects_path=os.path.join(fixtures_dir, "projects.parquet"),
         robots_path=os.path.join(fixtures_dir, "robots.parquet"),
     )
@@ -248,7 +197,12 @@ def run_crawl(
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cores",
+        type=int,
+        default=None,
+        help="local[cores] width (default: $SPARK_GRAFT_CPUS, else every CPU)",
+    )
     ap.add_argument("--crawl-only", action="store_true")
     ap.add_argument("--queries-only", action="store_true")
     ap.add_argument("--rounds", type=int, default=CRAWL_ROUNDS)
@@ -256,132 +210,29 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--page-words", type=int, default=30, help="approx words per synthetic page body")
     ap.add_argument("--seeds-div", type=int, default=30, help="round density: seeds = keys/seeds_div")
     ap.add_argument("--host-rate", type=float, default=None, help="per-host token rate/burst override")
-    ap.add_argument("--scaling", action="store_true", help="run crawl at local[8] and local[32], report efficiency")
-    ap.add_argument(
-        "--scaling-legs",
-        default=None,
-        help="override the thread-mode scaling pair as 'lo,hi' (e.g. "
-        "'2,8': an N->4N cores pair below this VM's 32-way contention "
-        "wall, isolating the job's scaling from the box's)",
-    )
-    ap.add_argument(
-        "--cluster",
-        action="store_true",
-        help="scaling legs on local-cluster[2,4,*] vs local-cluster[8,4,*] "
-        "(real executor JVMs, --py-files-shipped engine) instead of "
-        "local[8]/local[32] threads; with --crawl-only, --executors "
-        "selects one leg",
-    )
     ap.add_argument(
         "--executors",
         type=int,
         default=None,
-        help="run the crawl leg on local-cluster[N,4,*] executor JVMs",
-    )
-    ap.add_argument(
-        "--bucketed",
-        action="store_true",
-        help="crawl against the canon_url-bucketed pages layout with the "
-        "broadcast bound forced to 0 (co-located fetch join)",
-    )
-    ap.add_argument(
-        "--broadcast-rows",
-        type=int,
-        default=None,
-        help="override fetch/merge broadcast row bounds (0 = force the "
-        "shuffle-join at-scale plan)",
-    )
-    ap.add_argument(
-        "--frontier-scale",
-        action="store_true",
-        help="measure steady-round wall at 1M vs 8M frontier rows "
-        "(touch-only MERGE evidence); prints one JSON line",
-    )
-    ap.add_argument(
-        "--frontier-sizes",
-        default="1000000,8000000",
-        help="comma-separated frontier row counts for --frontier-scale "
-        "(e.g. 8000000,64000000 for the next-decade soak)",
-    )
-    ap.add_argument(
-        "--frontier-reps",
-        type=int,
-        default=2,
-        help="interleaved repetitions per size for --frontier-scale",
-    )
-    ap.add_argument(
-        "--migration-demo",
-        action="store_true",
-        help="auto-split evidence: bounded run must self-migrate with "
-        "crawl metrics identical to the unbounded twin",
+        help="run on local-cluster[N,4,*] executor JVMs (engine shipped as the --py-files zip)",
     )
     args = ap.parse_args(argv)
 
-    if args.migration_demo:
-        spark = _spark(args.cores)
-        fx = ensure_fixtures(
-            spark,
-            args.sf_dir,
-            mult=args.pages_mult,
-            page_words=args.page_words,
-            seeds_div=args.seeds_div,
-        )
-        out = run_migration_demo(spark, fx)
-        print(json.dumps(out))
-        spark.stop()
-        return 0
+    from pyspider_spark.engine.session import get_spark
 
-    if args.frontier_scale:
-        spark = _spark(args.cores)
-        fx = ensure_fixtures(
-            spark,
-            args.sf_dir,
-            mult=args.pages_mult,
-            page_words=args.page_words,
-            seeds_div=args.seeds_div,
-        )
-        sizes = tuple(int(s) for s in args.frontier_sizes.split(","))
-        out = run_frontier_scale(spark, fx, sizes=sizes, reps=args.frontier_reps)
-        print(json.dumps(out))
-        spark.stop()
-        return 0
-
-    if args.scaling and args.cluster:
-        if args.scaling_legs:
-            ap.error("--scaling-legs applies to thread-mode --scaling only; "
-                     "the --cluster protocol runs its fixed 1/2/4/8-executor legs")
-        return run_scaling_cluster(
-            args.sf_dir,
-            mult=max(args.pages_mult, 48),
-            page_words=max(args.page_words, 1200),
-            host_rate=args.host_rate if args.host_rate is not None else 3000.0,
-            broadcast_rows=args.broadcast_rows if args.broadcast_rows is not None else 0,
-        )
-    if args.scaling:
-        legs_pair = (8, 32)
-        if args.scaling_legs:
-            try:
-                lo_s, hi_s = args.scaling_legs.split(",")
-                legs_pair = (int(lo_s), int(hi_s))
-            except ValueError:
-                ap.error(f"--scaling-legs must be 'lo,hi' (two ints), got {args.scaling_legs!r}")
-            if not (0 < legs_pair[0] < legs_pair[1]):
-                ap.error(f"--scaling-legs needs 0 < lo < hi, got {legs_pair}")
-        return run_scaling(
-            args.sf_dir,
-            mult=max(args.pages_mult, 48),
-            page_words=max(args.page_words, 1200),
-            host_rate=args.host_rate if args.host_rate is not None else 3000.0,
-            broadcast_rows=args.broadcast_rows,
-            legs_pair=legs_pair,
-        )
-
-    spark = _spark(args.cores, executors=args.executors)
+    # shuffle partitions FIXED across parallelism levels: the north rule
+    # ships one artifact unchanged at N and 4N executors, and partition
+    # count is a property of the data size, not the cluster size —
+    # scaling it with cores would quadruple per-stage task overhead on
+    # the bigger cluster.
+    spark = get_spark(
+        cores=args.cores, shuffle_partitions=64, app_name="bench", n_executors=args.executors
+    )
     out: dict = {
         "metric": "contract queries + 3-round crawl wall time",
         "unit": "sec",
         "sf": _sf_of(args.sf_dir),
-        "cores": args.cores,
+        "cores": None,  # filled in after the run, once executors have registered
         "queries": {},
     }
     total = 0.0
@@ -403,660 +254,15 @@ def main(argv: list[str] | None = None) -> int:
             rounds=args.rounds,
             mult=args.pages_mult,
             host_rate=args.host_rate,
-            bucketed=args.bucketed,
-            broadcast_rows=args.broadcast_rows,
         )
         out["queries"]["crawl_rounds"] = crawl["wall_s"]
         out["crawl"] = crawl
         total += crawl["wall_s"]
+    out["cores"] = spark.sparkContext.defaultParallelism
     out["value"] = round(total, 3)
     print(json.dumps(out))
     spark.stop()
     return 0
-
-
-def run_frontier_scale(
-    spark,
-    fixtures_dir: str,
-    sizes: tuple[int, ...] = (1_000_000, 8_000_000),
-    rounds: int = 3,
-    reps: int = 2,
-) -> dict:
-    """Touch-only MERGE evidence: steady-round cost vs frontier size.
-
-    Grows a cold frontier (round 0 injects `size` never-due rows:
-    ``exetime`` far past the logical clock, so they merge into the
-    frontier but are never candidates) and then measures `rounds`
-    steady rounds of the SAME seed-driven crawl at each size. If the
-    frontier MERGE is truly touch-only (VERDICT r1 "wrong" #3 fix),
-    ``frontier_write`` stays flat as the frontier grows 8x and only the
-    candidates scan — columnar, 5 pruned columns, predicate-pushed —
-    may grow sublinearly. Round metrics (scheduled/ok/new_urls) must be
-    IDENTICAL across sizes: the cold mass must not perturb the crawl.
-
-    Identical config across legs; ``bloom_expected_keys`` is sized for
-    the largest leg (the documented sizing policy — capacity follows
-    the expected corpus) so no saturation rebuild fires mid-leg.
-    Legs are interleaved (small, large, small, large) so both sizes
-    sample the same JVM-warmth states; per-size wall is min-of-reps.
-    """
-    from pyspark.sql import functions as F
-
-    from pyspider_spark.config import RoundConfig
-    from pyspider_spark.engine.round import CrawlEngine
-
-    seeds_path = os.path.join(fixtures_dir, "seeds.parquet")
-    project = (
-        spark.read.parquet(os.path.join(fixtures_dir, "projects.parquet"))
-        .select("project")
-        .first()["project"]
-    )
-    per_size: dict[int, list[dict]] = {s: [] for s in sizes}
-    for rep in range(reps):
-        for size in sizes:
-            state = os.path.join(fixtures_dir, f"state_fscale_{os.getpid()}")
-            shutil.rmtree(state, ignore_errors=True)
-            cfg = RoundConfig(
-                rate=200.0,
-                burst=200.0,
-                n_partitions=32,
-                round_budget=None,
-                analyze=True,
-                pages_precanonical=True,
-                bloom_expected_keys=max(sizes) // 32 + 100_000,
-            )
-            eng = CrawlEngine(
-                spark,
-                state,
-                cfg,
-                pages_path=os.path.join(fixtures_dir, "pages.parquet"),
-                projects_path=os.path.join(fixtures_dir, "projects.parquet"),
-                robots_path=os.path.join(fixtures_dir, "robots.parquet"),
-            )
-            seeds = spark.read.parquet(seeds_path)
-            cold = (
-                spark.range(size)
-                .select(
-                    F.concat(
-                        F.lit("http://cold"),
-                        (F.col("id") % 4096).cast("string"),
-                        F.lit(".test/x"),
-                        F.col("id").cast("string"),
-                    ).alias("url"),
-                    F.lit(project).alias("project"),
-                    F.lit(cfg.t0 + 1e9).alias("exetime"),
-                )
-                .withColumn("canon_url", F.col("url"))
-            )
-            t0 = time.time()
-            metrics = eng.run_rounds(1 + rounds, seeds=seeds, inject_at={0: cold})
-            wall = time.time() - t0
-            shutil.rmtree(state, ignore_errors=True)
-            steady = metrics[1:]
-            per_size[size].append(
-                {
-                    "rep": rep,
-                    "grow_round_s": round(metrics[0]["wall_s"], 1),
-                    "frontier_rows": metrics[-1]["frontier"],
-                    "steady_wall_s": round(sum(m["wall_s"] for m in steady), 2),
-                    "steady_phase_s": {
-                        k: round(sum(m["phase_s"][k] for m in steady), 2)
-                        for k in steady[0]["phase_s"]
-                    },
-                    "round_metrics": [
-                        {k: m[k] for k in ("scheduled", "ok", "new_urls")}
-                        for m in steady
-                    ],
-                    "wall_s": round(wall, 1),
-                }
-            )
-            print(
-                json.dumps({"frontier_scale_leg": size, **per_size[size][-1]}),
-                file=sys.stderr,
-            )
-    best = {s: min(samples, key=lambda x: x["steady_wall_s"]) for s, samples in per_size.items()}
-    lo, hi = min(sizes), max(sizes)
-    out = {
-        "metric": "steady-round wall vs frontier size (touch-only MERGE evidence)",
-        "sizes": {str(s): best[s] for s in sizes},
-        "frontier_growth_x": round(best[hi]["frontier_rows"] / best[lo]["frontier_rows"], 2),
-        "steady_wall_growth_x": round(
-            best[hi]["steady_wall_s"] / best[lo]["steady_wall_s"], 3
-        ),
-        "crawl_metrics_identical_across_sizes": all(
-            s["round_metrics"] == per_size[lo][0]["round_metrics"]
-            for samples in per_size.values()
-            for s in samples
-        ),
-    }
-    return out
-
-
-def run_migration_demo(
-    spark,
-    fixtures_dir: str,
-    cold_rows: int = 2_000_000,
-    bound: int = 150_000,
-    rounds: int = 3,
-) -> dict:
-    """Auto-split evidence (max_rows_per_partition default ON): a
-    frontier whose partitions outgrow the bound must self-migrate
-    (n_partitions doubling between rounds) with crawl metrics
-    IDENTICAL to an unbounded twin run — the cold mass and the
-    re-bucketing must not perturb the crawl. Writes the comparison as
-    one JSON line (recorded in BENCH/migration_bench.json)."""
-    from pyspark.sql import functions as F
-
-    from pyspider_spark.config import RoundConfig
-    from pyspider_spark.engine.round import CrawlEngine
-
-    seeds_path = os.path.join(fixtures_dir, "seeds.parquet")
-    project = (
-        spark.read.parquet(os.path.join(fixtures_dir, "projects.parquet"))
-        .select("project")
-        .first()["project"]
-    )
-    runs: dict[str, dict] = {}
-    for label, cap in (("bounded", bound), ("unbounded", None)):
-        state = os.path.join(fixtures_dir, f"state_mig_{label}_{os.getpid()}")
-        shutil.rmtree(state, ignore_errors=True)
-        cfg = RoundConfig(
-            rate=200.0,
-            burst=200.0,
-            n_partitions=8,
-            round_budget=None,
-            analyze=True,
-            pages_precanonical=True,
-            bloom_expected_keys=cold_rows // 8 + 100_000,
-            max_rows_per_partition=cap,
-        )
-        eng = CrawlEngine(
-            spark,
-            state,
-            cfg,
-            pages_path=os.path.join(fixtures_dir, "pages.parquet"),
-            projects_path=os.path.join(fixtures_dir, "projects.parquet"),
-            robots_path=os.path.join(fixtures_dir, "robots.parquet"),
-        )
-        seeds = spark.read.parquet(seeds_path)
-        cold = (
-            spark.range(cold_rows)
-            .select(
-                F.concat(
-                    F.lit("http://cold"),
-                    (F.col("id") % 4096).cast("string"),
-                    F.lit(".test/x"),
-                    F.col("id").cast("string"),
-                ).alias("url"),
-                F.lit(project).alias("project"),
-                F.lit(cfg.t0 + 1e9).alias("exetime"),
-            )
-            .withColumn("canon_url", F.col("url"))
-        )
-        t0 = time.time()
-        metrics = eng.run_rounds(1 + rounds, seeds=seeds, inject_at={0: cold})
-        runs[label] = {
-            "wall_s": round(time.time() - t0, 1),
-            "migrations": [
-                {"after_round": m["round"], **m["migration"]}
-                for m in metrics
-                if "migration" in m
-            ],
-            "frontier_pid_max": [m["frontier_pid_max"] for m in metrics],
-            "counts": [
-                {k: m[k] for k in ("scheduled", "ok", "new_urls", "frontier")}
-                for m in metrics
-            ],
-        }
-        shutil.rmtree(state, ignore_errors=True)
-    return {
-        "metric": "auto-split migration demo (max_rows_per_partition)",
-        "cold_rows": cold_rows,
-        "bound": bound,
-        "bounded": runs["bounded"],
-        "unbounded": runs["unbounded"],
-        "migration_fired": bool(runs["bounded"]["migrations"]),
-        "counts_identical": runs["bounded"]["counts"] == runs["unbounded"]["counts"],
-    }
-
-
-def _run_leg(
-    sf_dir: str,
-    cores: int,
-    executors: int | None,
-    mult: int,
-    page_words: int,
-    seeds_div: int,
-    host_rate: float,
-    broadcast_rows: int | None,
-    rounds: int = 3,
-) -> dict:
-    """One crawl leg in a fresh JVM (subprocess); returns its JSON."""
-    cmd = [
-        sys.executable,
-        os.path.abspath(__file__),
-        "--crawl-only",
-        "--cores",
-        str(cores),
-        "--sf-dir",
-        sf_dir,
-        "--rounds",
-        str(rounds),
-        "--pages-mult",
-        str(mult),
-        "--page-words",
-        str(page_words),
-        "--seeds-div",
-        str(seeds_div),
-        "--host-rate",
-        str(host_rate),
-    ]
-    if executors is not None:
-        cmd += ["--executors", str(executors)]
-    if broadcast_rows is not None:
-        cmd += ["--broadcast-rows", str(broadcast_rows)]
-    p = subprocess.run(cmd, capture_output=True, text=True)
-    if p.returncode != 0:
-        sys.stderr.write(f"--- crawl leg cores={cores} FAILED (rc={p.returncode})\n")
-        sys.stderr.write("".join(p.stdout.splitlines(True)[-20:]))
-        sys.stderr.write("".join(p.stderr.splitlines(True)[-40:]))
-        raise subprocess.CalledProcessError(p.returncode, cmd)
-    line = [ln for ln in p.stdout.splitlines() if ln.startswith("{")][-1]
-    return json.loads(line)
-
-
-def finalize_scaling_report(report: dict) -> dict:
-    """Make the scaling artifact self-contained (round-4 verdict
-    "wrong" #3/#4): the raw numbers, the north-rule bar verdict, the
-    ceiling normalization AND its caveats all travel in the JSON.
-
-    - probe sanity: an 8→32-way efficiency probe is a ratio/4 and
-      cannot exceed 1.0; anything > 1.1 means the 8-way phase itself
-      was noise-hit (4 occurrences across this project) — such probes
-      are FLAGGED AND EXCLUDED from normalization, never used.
-    - normalization: cpu probes measure (tput_32proc / tput_8proc)/4,
-      a 4×-span composite; per-doubling ceiling = sqrt(probe). The
-      probe span (8→32 threads) is applied to the executor legs'
-      4→16-core span as the box's best available pure-CPU yardstick —
-      an approximation, stated here rather than assumed.
-    - the bar: the ≥0.8 north-rule criterion is judged on the RAW
-      composed 1→4 value. Normalized values contextualize the box,
-      they do not substitute for the bar."""
-    ceilings = report.get("machine_ceilings", {})
-    sanity: dict[str, str] = {
-        "rule": "cpu probe > 1.1 is physically impossible (noise-hit 8-way "
-        "phase) => flagged and excluded from normalization",
-    }
-    credible = []
-    for name in ("cpu_cold", "cpu_hot"):
-        v = ceilings.get(name)
-        if v is None:
-            continue
-        if v > 1.1:
-            sanity[name] = f"discarded ({v} > 1.1)"
-        else:
-            sanity[name] = "ok"
-            credible.append(v)
-    report["probe_sanity"] = sanity
-    raw = report.get("value")
-    dbl = report.get("eff_per_doubling") or {}
-    if credible and raw is not None:
-        ceiling = min(credible)  # conservative: the lower credible probe
-        per_dbl_ceiling = ceiling**0.5
-        report["cpu_ceiling_used"] = round(ceiling, 3)
-        report["cpu_ceiling_per_doubling"] = round(per_dbl_ceiling, 3)
-        report["value_of_ceiling"] = round(raw / ceiling, 3)
-        report["eff_per_doubling_of_ceiling"] = {
-            k: (round(v / per_dbl_ceiling, 3) if v is not None else None)
-            for k, v in dbl.items()
-        }
-    report["north_rule_bar"] = {
-        "required": 0.8,
-        "value_raw_1to4": raw,
-        "met_as_measured": (raw is not None and raw >= 0.8),
-        "note": (
-            "the bar is judged on the raw composed N->4N value; the "
-            "of-ceiling fields document how much of this box's measured "
-            "pure-CPU headroom the job captures (a real N->4N cluster "
-            "adds memory bus, disk and NIC with every node, which this "
-            "single box cannot)"
-        ),
-    }
-    return report
-
-
-def run_scaling_cluster(
-    sf_dir: str,
-    mult: int = 48,
-    page_words: int = 1200,
-    seeds_div: int = 5,
-    host_rate: float = 3000.0,
-    broadcast_rows: int = 0,
-) -> int:
-    """North-rule scaling evidence on REAL executor JVMs — the round-3
-    headline protocol. Legs are ``local-cluster[N,4,*]`` at N = 1, 2,
-    4, 8 executors (identical per-executor shape and config; the engine
-    zip ships via addPyFile = the spark-submit --py-files twin).
-
-    Headline pair: **N=1 → 4N=4 executors** (4 → 16 cores) — the
-    north rule's N and 4N cluster sizes, measured where this single
-    box still has data-movement headroom. The 8-executor leg is run
-    too and documents the box's saturation wall: this VM's disk
-    subsystem is FLAT at ~1 GB/s from 8 → 32 writers (ceiling ≈ 0.2)
-    and its memory bus scales ≈ 0.65 over that span (probes recorded
-    below), so beyond ~16 cores the job gains nothing the hardware can
-    deliver — a real cluster adds disk + NIC + memory bandwidth with
-    every node, which is exactly what the curve's in-headroom doublings
-    demonstrate. ``broadcast_rows=0`` pins the at-scale shuffle-join
-    plan on every leg (a 10^8-row production schedule is never
-    broadcast; forcing the same plan at bench scale keeps the two legs
-    comparing identical physics)."""
-    ceilings = {"cpu_cold": _machine_cpu_ceiling()}
-    legs: dict[int, list[dict]] = {1: [], 2: [], 4: [], 8: []}
-    # interleave: big legs sample early (cool) and late (hot) states;
-    # every leg runs the identical 3-round job (steady = rounds 1-2),
-    # and EVERY size gets the SAME rep count (2, best-of) so no ratio
-    # mixes best-of numerators with a single-sample denominator
-    plan = [(4, 3), (2, 3), (8, 3), (1, 3), (4, 3), (1, 3), (2, 3), (8, 3)]
-    for n_exec, rounds in plan:
-        legs[n_exec].append(
-            _run_leg(
-                sf_dir, 4 * n_exec, n_exec, mult, page_words, seeds_div,
-                host_rate, broadcast_rows, rounds=rounds,
-            )
-        )
-        sys.stderr.write(
-            json.dumps(
-                {
-                    "leg_done": n_exec,
-                    "steady_ups": legs[n_exec][-1]["crawl"]["steady_urls_per_sec"],
-                }
-            )
-            + "\n"
-        )
-    ceilings["cpu_hot"] = _machine_cpu_ceiling()
-    ceilings.update(_machine_resource_ceilings())
-    best: dict[int, dict] = {}
-    for n_exec, runs in legs.items():
-        counts = [
-            [(r["round"], r["scheduled"], r["ok"]) for r in run["crawl"]["rounds"][:3]]
-            for run in runs
-        ]
-        assert all(c == counts[0] for c in counts), f"nondeterministic rounds: {counts}"
-        b = max(runs, key=lambda run: run["crawl"]["steady_urls_per_sec"])
-        b["crawl"]["all_runs_steady"] = [
-            run["crawl"]["steady_urls_per_sec"] for run in runs
-        ]
-        best[n_exec] = b["crawl"]
-    ups = {n: best[n]["steady_urls_per_sec"] for n in best}
-    eff_1to4 = (ups[4] / ups[1]) / 4 if ups.get(1) else None
-    report = {
-        "metric": "crawl scaling efficiency local-cluster[1,4] -> local-cluster[4,4] (N -> 4N executor JVMs)",
-        "mode": "executor-jvms",
-        "unit": "ratio",
-        "sf": _sf_of(sf_dir),
-        "pages_mult": mult,
-        "page_words": page_words,
-        "seeds_div": seeds_div,
-        "host_rate": host_rate,
-        "broadcast_rows_override": broadcast_rows,
-        "steady_urls_per_sec": {str(n): ups[n] for n in sorted(ups)},
-        "value": round(eff_1to4, 3) if eff_1to4 else None,
-        "speedup_1to4": round(ups[4] / ups[1], 2) if ups.get(1) else None,
-        "eff_per_doubling": {
-            "1to2": round((ups[2] / ups[1]) / 2, 3) if ups.get(1) else None,
-            "2to4": round((ups[4] / ups[2]) / 2, 3),
-            "4to8": round((ups[8] / ups[4]) / 2, 3),
-        },
-        "saturation_note": (
-            "the 4->8-executor leg crosses this box's shared "
-            "data-movement wall (disk flat ~1 GB/s 8->32 writers, "
-            "membw ~0.65); see machine ceilings"
-        ),
-        "machine_ceilings": ceilings,
-        "legs": {str(n): best[n] for n in sorted(best)},
-    }
-    print(json.dumps(finalize_scaling_report(report)))
-    return 0
-
-
-def run_scaling(
-    sf_dir: str,
-    mult: int = 48,
-    page_words: int = 1200,
-    seeds_div: int = 5,
-    host_rate: float = 3000.0,
-    cluster: bool = False,
-    broadcast_rows: int | None = None,
-    legs_pair: tuple[int, int] = (8, 32),
-) -> int:
-    """North-rule scaling evidence: same job, same input, two
-    parallelism levels in fresh JVMs. efficiency =
-    (ups_hi/ups_lo)/(hi/lo). ``legs_pair`` picks the two thread
-    counts (default local[8] -> local[32]); a pair further from this
-    VM's 32-way contention wall (e.g. 2 -> 8) isolates the JOB's
-    scaling from the box's — both the pair and its measured same-run
-    pure-CPU ceiling travel in the report so neither reading can be
-    quoted without the other.
-
-    Regime: `mult`-times-larger web with realistic page bodies AND
-    dense rounds (``seeds_div=5`` → rounds of ~10^6 URLs over a 7.2 M
-    page web). Two single-box ceilings force the dense regime for a
-    meaningful measurement (both quantified in BENCH/BASELINE.md):
-    (a) per-round fixed latency (~15-20 s of Spark job scheduling +
-    driver bookkeeping) — invariant in cores, dominates sparse rounds;
-    (b) the corpus-scan decode is memory-BANDWIDTH-bound, and one box's
-    memory bus is shared across both legs (a real 4x cluster scales
-    bandwidth 4x with nodes). Dense rounds make per-URL extraction —
-    the component that scales with cores everywhere — the dominant
-    term, which is exactly the 10^10-design-point proportion (rounds of
-    10^7-10^8 URLs)."""
-    lo, hi = legs_pair
-    factor = hi / lo
-    repeats = 2  # best-of-N per leg: this box's per-core throughput
-    # drifts ±30% run to run (governor/thermal state); min-wall is the
-    # standard noise control, and identical round metrics across
-    # repeats double-check determinism. Legs are INTERLEAVED
-    # (hi,lo,hi,lo) so each parallelism level samples both an early
-    # (cooler) and late (hotter) thermal state — running all hi-legs
-    # first deflated the lo-leg and silently inflated efficiency.
-    ceiling_cold = _machine_cpu_ceiling(lo, hi)  # before legs: coolest state
-
-    def _leg(cores: int) -> dict:
-        cmd = [
-            sys.executable,
-            os.path.abspath(__file__),
-            "--crawl-only",
-            "--cores",
-            str(cores),
-            "--sf-dir",
-            sf_dir,
-            "--rounds",
-            "3",
-            "--pages-mult",
-            str(mult),
-            "--page-words",
-            str(page_words),
-            "--seeds-div",
-            str(seeds_div),
-            "--host-rate",
-            str(host_rate),
-        ]
-        if cluster:
-            # N → 4N REAL executor JVMs (4 cores each): separate heaps,
-            # GCs, block managers and IPC — the faithful single-box
-            # analog of the north rule's two cluster sizes; the engine
-            # zip ships to the executors via addPyFile (the spark-submit
-            # --py-files twin), so both legs run the same artifact
-            cmd += ["--executors", str(cores // 4)]
-        if broadcast_rows is not None:
-            cmd += ["--broadcast-rows", str(broadcast_rows)]
-        p = subprocess.run(cmd, capture_output=True, text=True)
-        if p.returncode != 0:
-            # surface the child's tail before failing — a swallowed
-            # CalledProcessError makes scaling-leg failures undiagnosable
-            sys.stderr.write(f"--- crawl leg local[{cores}] FAILED (rc={p.returncode})\n")
-            sys.stderr.write("".join(p.stdout.splitlines(True)[-20:]))
-            sys.stderr.write("".join(p.stderr.splitlines(True)[-40:]))
-            raise subprocess.CalledProcessError(p.returncode, cmd)
-        line = [ln for ln in p.stdout.splitlines() if ln.startswith("{")][-1]
-        return json.loads(line)
-
-    legs: dict[int, list[dict]] = {lo: [], hi: []}
-    for _rep in range(repeats):
-        for cores in (hi, lo):  # hi first: fixture gen (cached) uses all cores
-            legs[cores].append(_leg(cores))
-    results = {}
-    for cores, runs in legs.items():
-        counts = [
-            [(r["round"], r["scheduled"], r["ok"]) for r in run["crawl"]["rounds"]]
-            for run in runs
-        ]
-        assert all(c == counts[0] for c in counts), f"nondeterministic rounds: {counts}"
-        best = max(runs, key=lambda run: run["crawl"]["steady_urls_per_sec"])
-        best["crawl"]["all_runs_steady"] = [
-            run["crawl"]["steady_urls_per_sec"] for run in runs
-        ]
-        results[cores] = best
-    u_lo = results[lo]["crawl"]["steady_urls_per_sec"]
-    u_hi = results[hi]["crawl"]["steady_urls_per_sec"]
-    eff = (u_hi / u_lo) / factor if u_lo > 0 else 0.0
-    ceiling = _machine_cpu_ceiling(lo, hi)  # after legs: hottest state
-    report = {
-        "metric": (
-            f"crawl scaling efficiency local-cluster[{lo // 4},4] -> local-cluster[{hi // 4},4]"
-            if cluster
-            else f"crawl scaling efficiency local[{lo}] -> local[{hi}]"
-        ),
-        "mode": "executor-jvms" if cluster else "threads",
-        "unit": "ratio",
-        "sf": _sf_of(sf_dir),
-        "pages_mult": mult,
-        "page_words": page_words,
-        "seeds_div": seeds_div,
-        "host_rate": host_rate,
-        f"t_local{lo}_s": results[lo]["crawl"]["wall_s"],
-        f"t_local{hi}_s": results[hi]["crawl"]["wall_s"],
-        f"steady_urls_per_sec_local{lo}": u_lo,
-        f"steady_urls_per_sec_local{hi}": u_hi,
-        "value": round(eff, 3),
-        "speedup": round(u_hi / u_lo, 2) if u_lo > 0 else 0.0,
-        # pure-CPU 8->32-process scaling of THIS machine (shared memory
-        # bus + frequency scaling cap any single-box measurement),
-        # probed cold (before legs) and hot (after) because the
-        # governor/thermal state moves it 0.5-0.9 run to run; the
-        # job's efficiency normalized by it shows whether the JOB itself
-        # anti-scales beyond what the hardware imposes
-        "machine_cpu_ceiling_cold": ceiling_cold,
-        "machine_cpu_ceiling_hot": ceiling,
-        "machine_cpu_ceiling": max(ceiling_cold, ceiling),
-        # per-resource-class lo→hi scaling of this box (cpu probe
-        # above; membw + disk below) — the composite physics bound on
-        # any single-box N→4N efficiency measurement
-        "machine_resource_ceilings": _machine_resource_ceilings(lo, hi),
-        "broadcast_rows_override": broadcast_rows,
-        "normalized_efficiency": round(eff / max(ceiling_cold, ceiling), 3)
-        if max(ceiling_cold, ceiling)
-        else None,
-        "legs": {str(c): results[c]["crawl"] for c in (lo, hi)},
-    }
-    print(json.dumps(report))
-    return 0
-
-
-def _burn(n: int) -> int:
-    s = 0
-    for i in range(n):
-        s += i * i
-    return s
-
-
-def _machine_cpu_ceiling(lo: int = 8, hi: int = 32) -> float:
-    """Pure-python process-pool scaling lo -> hi workers on this box:
-    the hardware's own ceiling for any CPU-bound (hi/lo)x-parallelism
-    gain."""
-    import time as _time
-    from concurrent.futures import ProcessPoolExecutor
-
-    n = 4_000_000
-    thr = {}
-    for workers in (lo, hi):
-        with ProcessPoolExecutor(workers) as ex:
-            list(ex.map(_burn, [n // 10] * workers))  # warm the pool
-            t = _time.time()
-            list(ex.map(_burn, [n] * workers * 3))
-            el = _time.time() - t
-        thr[workers] = workers * 3 * n / el
-    return round((thr[hi] / thr[lo]) / (hi / lo), 3)
-
-
-def _mem_stream(n: int) -> int:
-    import numpy as np
-    import os as _os
-
-    arr = np.frombuffer(_os.urandom(64 * 1024 * 1024), dtype=np.uint8)
-    s = 0
-    for _ in range(n):
-        s += int(arr.sum())  # streaming traversal of 64 MB
-    return s
-
-
-def _io_rw(i: int) -> int:
-    import os as _os
-
-    p = f"/tmp/ioprobe_{_os.getpid()}_{i}"
-    data = _os.urandom(64 * 1024 * 1024)
-    with open(p, "wb") as f:
-        for _ in range(4):
-            f.write(data)
-        f.flush()
-        _os.fsync(f.fileno())
-    n = 0
-    with open(p, "rb") as f:
-        while True:
-            b = f.read(16 * 1024 * 1024)
-            if not b:
-                break
-            n += len(b)
-    _os.remove(p)
-    return n
-
-
-def _machine_resource_ceilings(lo: int = 8, hi: int = 32) -> dict:
-    """lo → hi-worker scaling of THIS box per resource class — the
-    physics any single-box N→4N measurement is bounded by. A Spark
-    round blends all three: extraction/python = cpu, scans/Arrow/
-    shuffles = membw, cache-spill/state-writes/shuffle-files = disk.
-    Measured here (sandbox VM, 8→32): cpu ~0.7-1.0, membw ~0.65, disk
-    ~1 GB/s FLAT (≈0.25 efficiency) — a real N→4N cluster scales each
-    with node count."""
-    import time as _time
-    from concurrent.futures import ProcessPoolExecutor
-
-    factor = hi / lo
-    out: dict = {}
-    thr = {}
-    for workers in (lo, hi):
-        with ProcessPoolExecutor(workers) as ex:
-            list(ex.map(_mem_stream, [1] * workers))
-            t = _time.time()
-            list(ex.map(_mem_stream, [6] * workers))
-            el = _time.time() - t
-        thr[workers] = workers * 6 * 64 / 1024 / el
-    out[f"membw_gbps_{lo}"] = round(thr[lo], 1)
-    out[f"membw_gbps_{hi}"] = round(thr[hi], 1)
-    out["membw_ceiling"] = round((thr[hi] / thr[lo]) / factor, 3)
-    thr = {}
-    for workers in (lo, hi):
-        with ProcessPoolExecutor(workers) as ex:
-            t = _time.time()
-            list(ex.map(_io_rw, range(workers)))
-            el = _time.time() - t
-        thr[workers] = workers * 256 * 2 / 1024 / el
-    out[f"disk_gbps_{lo}"] = round(thr[lo], 2)
-    out[f"disk_gbps_{hi}"] = round(thr[hi], 2)
-    out["disk_ceiling"] = round((thr[hi] / thr[lo]) / factor, 3)
-    return out
 
 
 if __name__ == "__main__":

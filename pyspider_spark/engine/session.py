@@ -24,26 +24,19 @@ def _default_driver_mem() -> str:
     return "8g"
 
 
-# per-executor core count of local-cluster legs — the single source of
-# truth for cluster-shape math (scaling bench legs, profiler width)
-EXECUTOR_CORES = 4
-
-
 def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     app_name: str = "pyspider_spark",
     n_executors: int | None = None,
-    executor_cores: int = EXECUTOR_CORES,
-    executor_mem_mb: int = 10240,
 ) -> SparkSession:
     """local[cores] session; AQE + Arrow on.
 
-    ``n_executors`` switches to ``local-cluster[n, executor_cores,
-    executor_mem_mb]`` — REAL executor JVMs with separate heaps,
-    block managers and IPC/serialization boundaries, the closest
-    single-box analog of an N-executor cluster (the scaling bench's
-    N → 4N legs; ``cores`` is ignored there). The engine package ships
+    ``n_executors`` switches to ``local-cluster[n, 4, 10240]`` — REAL
+    executor JVMs (4 cores, 10 GB each) with separate heaps, block
+    managers and IPC/serialization boundaries, the closest single-box
+    analog of an N-executor cluster (``bench.py --crawl-only
+    --executors N``; ``cores`` is ignored there). The engine package ships
     to the executors as a zip via ``addPyFile`` — the runtime twin of
     ``spark-submit --py-files dist/pyspider_spark.zip``
     (BASELINE.json:14), so the measured legs run the same shipped
@@ -57,7 +50,7 @@ def get_spark(
     sp = shuffle_partitions or max(8, 2 * cores)
     driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     if n_executors is not None:
-        master = f"local-cluster[{n_executors},{executor_cores},{executor_mem_mb}]"
+        master = f"local-cluster[{n_executors},4,10240]"
         # executor JVMs get their own heap; the driver no longer hosts
         # the executor threads, so it needs far less than local-mode
         driver_mem = os.environ.get("SPARK_DRIVER_MEM") or "8g"
@@ -89,9 +82,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_mem)
         .config("spark.driver.maxResultSize", "4g")
-        # off by default (pure overhead for batch jobs); profiling
-        # tools (scripts/profile_round.py) flip it on to read per-stage
-        # executor metrics from the UI REST API
+        # off by default (pure overhead for batch jobs);
+        # `crawlbench/run.py --trace 1` flips it on (SPARK_GRAFT_UI) to
+        # read per-phase stage metrics from the UI REST API
         .config(
             "spark.ui.enabled",
             "true" if os.environ.get("SPARK_GRAFT_UI") else "false",
@@ -101,7 +94,7 @@ def get_spark(
     # ad-hoc conf overrides for tuning experiments, e.g.
     #   SPARK_GRAFT_CONF="spark.sql.constraintPropagation.enabled=false;k2=v2"
     if n_executors is not None:
-        b = b.config("spark.executor.memory", f"{executor_mem_mb}m")
+        b = b.config("spark.executor.memory", "10240m")
     for kv in (os.environ.get("SPARK_GRAFT_CONF") or "").split(";"):
         if "=" in kv:
             k, _, v = kv.partition("=")
