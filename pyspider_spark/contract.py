@@ -673,9 +673,10 @@ FROM frontier
 
 
 def q_schedule_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O1/O2/O3 — the engine's real salted applyInPandas politeness
-    pass from a cold host_state; from a full bucket the admitted set
-    equals the SQL per-host top-⌊burst⌋ in O1 order (the oracle)."""
+    """O1/O2/O3 — the engine's real politeness pass (salted two-phase
+    window rank over the joined bucket state) from a cold host_state;
+    from a full bucket the admitted set equals the SQL per-host
+    top-⌊burst⌋ in O1 order (the oracle)."""
     from pyspider_spark.config import RoundConfig
     from pyspider_spark.engine import schema as S
     from pyspider_spark.engine.politeness import schedule_round

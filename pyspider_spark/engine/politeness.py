@@ -13,8 +13,10 @@ a top-k with k = ⌊tokens⌋ ≤ ⌊burst⌋, so a salted two-phase rank bounds
 any single task's data: phase 1 keeps the top ⌊burst⌋ rows per
 (host, salt) with a window rank — a hot host with millions of frontier
 rows contributes at most n_salts·⌊burst⌋ rows to phase 2 — then phase 2
-runs the exact bucket math per host over that tiny reduced set in
-applyInPandas with carried (tokens, last_ts) state.
+left-joins the carried (tokens, last_ts) bucket state, refills it with
+the exact double ops of ``kernels.bucket.refill_scalar`` and keeps each
+host's top ⌊refilled⌋ rows with a second, per-host window rank. Both
+phases run in the JVM; only the robots check calls into Python.
 """
 
 from __future__ import annotations
@@ -24,12 +26,11 @@ import urllib.robotparser
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
-from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
+from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql.types import BooleanType, DoubleType
 
 from pyspider_spark.config import RoundConfig
 from pyspider_spark.engine.stages import bounded_broadcast, order_cols
-from pyspider_spark.kernels.bucket import refill_scalar
 
 ADMIT_COLS = [
     "project",
@@ -127,54 +128,53 @@ def check_robots(
     return j.withColumn("allowed", allowed).drop("robots_txt")
 
 
+def _top_k(df: DataFrame, keys: list[str], k: Column | int) -> DataFrame:
+    """The rows ranked ≤ `k` in O1 order within each `keys` group — a
+    JVM window rank, no Python round trip."""
+    w = Window.partitionBy(*keys).orderBy(*order_cols())
+    return df.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= k).drop("_rk")
+
+
+def _salted_top_k(df: DataFrame, key: str, k: Column | int, salts: int) -> DataFrame:
+    """Phase 1 of a per-`key` top-`k`: the top `k` per (key, salt), so a
+    hot key hands phase 2 at most salts·k rows."""
+    salted = df.withColumn("salt", F.pmod(F.xxhash64("taskid", "project"), F.lit(salts)))
+    return _top_k(salted, [key, "salt"], k).drop("salt")
+
+
 def admit(
     passing: DataFrame, host_state: DataFrame, cfg: RoundConfig, now: float
 ) -> DataFrame:
     """Per-host bucket admission over robots-passing candidates with
     host != ''. Returns admitted rows + `refilled` (the host's
     post-refill token count, needed for the post-budget state update).
-    """
-    k = max(1, int(cfg.burst))
-    # phase 1: salted pre-rank — per-(host, salt) top ⌊burst⌋ bounds
-    # skew; admitted set is unchanged because k_host ≤ ⌊burst⌋.
-    salted = passing.withColumn(
-        "salt", F.pmod(F.xxhash64("taskid", "project"), F.lit(cfg.n_salts))
-    )
-    w = Window.partitionBy("host", "salt").orderBy(*order_cols())
-    reduced = (
-        salted.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk", "salt")
-    )
 
-    # phase 2: exact bucket math per host (tiny groups post-phase-1)
+    Phase 1 (salted pre-rank) keeps the per-(host, salt) top ⌊burst⌋;
+    the admitted set is unchanged because ⌊refilled⌋ ≤ ⌊burst⌋. Phase 2
+    joins the host's carried (tokens, last_ts) — a host with no row
+    starts full, ``(burst, now)`` — computes ``refilled =
+    least(burst, tokens + rate·greatest(0, now − last_ts))`` (the same
+    double ops, in the same order, as ``kernels.bucket.refill_scalar``,
+    so the carried tokens stay bit-identical to the simulator's) and
+    keeps the host's rows ranked ≤ ⌊refilled⌋ in O1 order.
+    """
+    reduced = _salted_top_k(passing, "host", max(1, int(cfg.burst)), cfg.n_salts)
     st = host_state.select(
         "host", F.col("tokens").alias("_tokens"), F.col("last_ts").alias("_last_ts")
     )
     joined = reduced.select(*_admit_cols(reduced)).join(st, "host", "left")
-
-    out_schema = StructType(
-        joined.drop("_tokens", "_last_ts").schema.fields
-        + [StructField("refilled", DoubleType())]
+    burst = F.lit(float(cfg.burst))
+    now_c = F.lit(float(now))
+    tokens = F.coalesce(F.col("_tokens"), burst)
+    last_ts = F.coalesce(F.col("_last_ts"), now_c)
+    refilled = F.least(
+        burst, tokens + F.lit(float(cfg.rate)) * F.greatest(F.lit(0.0), now_c - last_ts)
     )
-    rate, burst = cfg.rate, cfg.burst
-
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tokens = pdf["_tokens"].iloc[0]
-        last_ts = pdf["_last_ts"].iloc[0]
-        if pd.isna(tokens):  # host never scheduled before → full bucket
-            tokens, last_ts = burst, now
-        tok = refill_scalar(float(tokens), float(last_ts), now, rate, burst)
-        n = int(tok)
-        pdf = pdf.sort_values(
-            ["priority", "exetime", "taskid", "project"],
-            ascending=[False, True, True, True],
-        ).head(n)
-        pdf = pdf.drop(columns=["_tokens", "_last_ts"])
-        pdf["refilled"] = tok
-        return pdf
-
-    return joined.groupBy("host").applyInPandas(fn, out_schema)
+    return _top_k(
+        joined.withColumn("refilled", refilled).drop("_tokens", "_last_ts"),
+        ["host"],
+        F.floor("refilled"),
+    )
 
 
 def project_cap(sched: DataFrame, caps: dict[str, int], cfg: RoundConfig) -> DataFrame:
@@ -188,8 +188,9 @@ def project_cap(sched: DataFrame, caps: dict[str, int], cfg: RoundConfig) -> Dat
     dict (no rate/burst row, or unlimited sentinel) pass through
     untouched — ZERO extra work for them. Selection is the global O1
     top-⌊tok⌋ within each capped project, made skew-safe by the same
-    salted two-phase used for hosts: per-(project, salt) pre-rank keeps
-    ≤ cap rows, so the exact per-project pass sees ≤ n_salts·cap rows.
+    salted two-phase rank used for hosts: the per-(project, salt)
+    pre-rank keeps ≤ cap rows, then a per-project window rank keeps the
+    first cap of the ≤ n_salts·cap survivors.
     """
     if not caps:
         return sched
@@ -197,31 +198,10 @@ def project_cap(sched: DataFrame, caps: dict[str, int], cfg: RoundConfig) -> Dat
         *[F.lit(x) for k in sorted(caps) for x in (k, int(caps[k]))]
     )
     is_capped = F.col("project").isin(list(caps))
-    free = sched.filter(~is_capped)
     capped = sched.withColumn("_cap", cap_map[F.col("project")]).filter(is_capped)
-
-    salted = capped.withColumn(
-        "salt", F.pmod(F.xxhash64("taskid", "project"), F.lit(cfg.n_salts))
-    )
-    w = Window.partitionBy("project", "salt").orderBy(*order_cols())
-    reduced = (
-        salted.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= F.col("_cap"))
-        .drop("_rk", "salt")
-    )
-
-    out_schema = sched.schema
-
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        n = int(pdf["_cap"].iloc[0])
-        pdf = pdf.sort_values(
-            ["priority", "exetime", "taskid", "project"],
-            ascending=[False, True, True, True],
-        ).head(n)
-        return pdf.drop(columns=["_cap"])
-
-    return free.unionByName(
-        reduced.groupBy("project").applyInPandas(fn, out_schema)
+    reduced = _salted_top_k(capped, "project", F.col("_cap"), cfg.n_salts)
+    return sched.filter(~is_capped).unionByName(
+        _top_k(reduced, ["project"], F.col("_cap")).drop("_cap")
     )
 
 

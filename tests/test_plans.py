@@ -20,6 +20,10 @@ from pyspider_spark.config import RoundConfig
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
+# physical operators that evaluate Python: a row UDF, a vectorized UDF,
+# a grouped map
+PYTHON_EVAL_MARKERS = ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas")
+
 
 def _plan(df) -> str:
     """Formatted physical plan (post-Catalyst, pre-execution)."""
@@ -189,7 +193,7 @@ def test_status_counts_stays_jvm_side(spark):
     # map-side combine: partial_count before the exchange, final after
     assert "partial_count" in plan
     assert plan.count("HashAggregate") >= 2
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas"):
+    for marker in PYTHON_EVAL_MARKERS:
         assert marker not in plan
 
 
@@ -222,3 +226,111 @@ def test_robots_join_broadcast_is_bounded(spark):
         cands, robots, cfg, robots_rows=cfg.robots_broadcast_max_rows + 1
     )
     assert "ResolvedHint" not in over._jdf.queryExecution().optimizedPlan().toString()
+
+
+# ---------------------------------------------------------------------------
+# politeness admission: both caps rank in the JVM (no Python operator),
+# and the host bucket's refill is bit-identical to the scalar kernel
+# ---------------------------------------------------------------------------
+NOW, RATE, BURST = 1000.3, 1.3, 3.5
+
+# host -> carried (tokens, last_ts); "c.test" has no row, so it starts full
+HOST_STATE = {
+    "a.test": (1.1, 999.6),  # fractional refill: 1.1 + 1.3*0.7 ~ 2.01
+    "b.test": (0.2, 900.0),  # refill capped at burst
+    "d.test": (0.1, 1000.0),  # refilled < 1 admits nothing
+    "e.test": (2.25, NOW),  # no elapsed time; admits 2 of 3 tied rows
+    "f.test": (1.5, 1001.0),  # last_ts after now: no refill, no drain
+}
+
+# (project, taskid, host, priority, exetime)
+ADMIT_ROWS = [
+    ("p1", "a0", "a.test", 1, 5.0),
+    ("p1", "a1", "a.test", 2, 9.0),
+    ("p1", "a2", "a.test", 1, 4.0),
+    ("p1", "b0", "b.test", 0, 1.0),
+    ("p1", "b1", "b.test", 0, 2.0),
+    ("p1", "b2", "b.test", 0, 3.0),
+    ("p1", "b3", "b.test", 0, 4.0),
+    ("p2", "c0", "c.test", 0, 4.0),
+    ("p2", "c1", "c.test", 3, 4.0),
+    ("p2", "c2", "c.test", 0, 2.0),
+    ("p2", "c3", "c.test", 0, 3.0),
+    ("p1", "d0", "d.test", 5, 1.0),
+    ("p1", "d1", "d.test", 5, 2.0),
+    ("p2", "t1", "e.test", 0, 1.0),  # ties on priority/exetime: taskid,
+    ("p1", "t1", "e.test", 0, 1.0),  # then project, decides
+    ("p1", "t0", "e.test", 0, 1.0),
+    ("p2", "f0", "f.test", 0, 1.0),
+    ("p2", "f1", "f.test", 0, 2.0),
+]
+
+
+def _o1(row):
+    project, taskid, _host, priority, exetime = row
+    return (-priority, exetime, taskid, project)
+
+
+def _admit_frame(spark, rows):
+    return spark.createDataFrame(
+        [
+            (p, t, f"http://{h}/{t}", f"http://{h}/{t}", h, pr, ex, -1.0, False, "cb", 3)
+            for p, t, h, pr, ex in rows
+        ],
+        "project string, taskid string, url string, canon_url string, "
+        "host string, priority int, exetime double, age double, "
+        "auto_recrawl boolean, callback string, retries_left int",
+    )
+
+
+def test_admit_and_project_cap_stay_jvm_side(spark):
+    from pyspider_spark.engine.politeness import admit, project_cap
+    from pyspider_spark.engine.schema import HOST_STATE_SCHEMA, empty_df
+
+    cfg = RoundConfig(rate=RATE, burst=BURST, n_partitions=4)
+    passing = _admit_frame(spark, ADMIT_ROWS)
+    admitted = admit(passing, empty_df(spark, HOST_STATE_SCHEMA), cfg, NOW)
+    capped = project_cap(passing, {"p2": 2}, cfg)
+    for df in (admitted, capped):
+        plan = _plan(df)
+        for marker in PYTHON_EVAL_MARKERS:
+            assert marker not in plan
+    # the project cap keeps the O1 top-2 of p2 and passes p1 through
+    got = sorted((r.project, r.taskid) for r in capped.collect())
+    p2 = sorted((r for r in ADMIT_ROWS if r[0] == "p2"), key=_o1)[:2]
+    want = sorted((r[0], r[1]) for r in ADMIT_ROWS if r[0] == "p1" or r in p2)
+    assert got == want
+
+
+def test_admit_carries_bucket_state_exactly(spark):
+    from pyspider_spark.engine.politeness import admit
+    from pyspider_spark.engine.schema import HOST_STATE_SCHEMA
+    from pyspider_spark.kernels.bucket import refill_scalar
+
+    cfg = RoundConfig(rate=RATE, burst=BURST, n_partitions=4)
+    host_state = spark.createDataFrame(
+        [(h, t, ts) for h, (t, ts) in HOST_STATE.items()], HOST_STATE_SCHEMA
+    )
+    out = admit(_admit_frame(spark, ADMIT_ROWS), host_state, cfg, NOW).collect()
+
+    got: dict[str, list] = {}
+    for r in out:
+        got.setdefault(r.host, []).append(r)
+    for host in sorted({r[2] for r in ADMIT_ROWS}):
+        tokens, last_ts = HOST_STATE.get(host, (BURST, NOW))
+        refilled = refill_scalar(tokens, last_ts, NOW, RATE, BURST)
+        ranked = sorted((r for r in ADMIT_ROWS if r[2] == host), key=_o1)
+        admitted = got.get(host, [])
+        assert sorted((r.project, r.taskid) for r in admitted) == sorted(
+            (r[0], r[1]) for r in ranked[: int(refilled)]
+        ), host
+        assert all(r.refilled == refilled for r in admitted), host
+    # each case the state table sets up occurs as described there
+    assert {h: len(v) for h, v in got.items()} == {
+        "a.test": 2, "b.test": 3, "c.test": 3, "e.test": 2, "f.test": 1,
+    }
+    assert got["a.test"][0].refilled % 1 != 0
+    assert got["b.test"][0].refilled == BURST
+    assert sorted((r.project, r.taskid) for r in got["e.test"]) == [
+        ("p1", "t0"), ("p1", "t1"),
+    ]
