@@ -124,9 +124,10 @@ def run_queries(spark, sf_dir: str) -> dict[str, float]:
         df = fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         times[name] = round(time.time() - t, 3)
-        # queries are independent: drop any intermediates a CUSTOM
-        # query persisted (they are only valid within its own plan) so
-        # caches don't accumulate GC pressure across the 40+ queries
+        # queries are independent: drop any intermediates an
+        # engine-backed query persisted (they are only valid within its
+        # own plan) so caches don't accumulate GC pressure across the
+        # 58 queries
         spark.catalog.clearCache()
     return times
 

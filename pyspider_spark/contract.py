@@ -6,20 +6,24 @@ Design for oracle fidelity
 --------------------------
 The driver runs each ``queries()[name]`` on Spark and the matching
 ``oracle_sql()[name]`` on DuckDB over the same parquet tables, then
-compares row-count + schema + order-insensitive value hash. Three tiers:
+compares row-count + schema + order-insensitive value hash. One ordered
+registry, ``GATES``, maps every gate name to its (Spark query, DuckDB
+oracle) pair; ``build_queries`` and ``build_oracles`` are its two
+columns. A gate is one of two kinds:
 
-- ``COMMON_SQL``: ONE SQL string that both Spark SQL and DuckDB parse
-  identically (the relational spine: filters, windows, joins, aggs,
-  md5, CASE). Spark runs it through Catalyst — broadcast joins, partial
-  aggs, whole-stage codegen all apply — while DuckDB provides the
-  oracle, so dialect drift is structurally impossible.
-- ``PAIRED_SQL``: array/lambda ops where dialects differ only in
+- engine-backed: the Spark side calls the engine function the crawl
+  round (or the corpus pipeline) runs — pandas-UDF kernels, the
+  politeness pass, the seen probe, the MERGE — against a handwritten
+  DuckDB oracle that states the spec directly;
+- pure-SQL pair: array/lambda SQL where the dialects differ only in
   function names (``transform``/``list_transform``, ``explode``/
-  ``unnest`` …). Both strings are generated from the same Python
-  helpers so the *semantics* are written once.
-- ``CUSTOM``: Spark-side Python (pandas-UDF kernels, applyInPandas
-  politeness, mapInPandas bloom probe, engine rounds) with a
-  handwritten SQL oracle where expressible, rows-only otherwise.
+  ``unnest`` …); both strings come from the same Python helpers so the
+  *semantics* are written once.
+
+Order rule: every engine-backed gate comes before every pure-SQL pair.
+The driver checks only the first 50 gates, and only engine-backed gates
+can be broken by an engine change, so they must all fall inside that
+window.
 
 Float-valued outputs are rounded to 6 (or fewer) decimals on BOTH
 sides before comparison; every computed column is aliased identically.
@@ -38,7 +42,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 TABLES = [
     "region",
@@ -175,32 +179,32 @@ def _cosine(dialect: str, a: str, b: str) -> str:
 
 
 # =====================================================================
-# COMMON_SQL — one string, both engines
+# Spec oracles of the crawl-spine gates: plain SQL run by DuckDB, while
+# the Spark side drives the engine kernel, expression or join the round
+# runs (the q_* functions below)
 # =====================================================================
 
-COMMON_SQL: dict[str, str] = {}
-
 # F1 — taskid = md5(url) (libs/utils.py — md5string; base_handler.get_taskid)
-COMMON_SQL["crawl_taskid_md5"] = f"""
+ORACLE_TASKID_MD5 = f"""
 WITH {FRONTIER_CTE}
 SELECT k, url, md5(url) AS taskid FROM frontier
 """
 
 # F10 — host extraction (politeness key)
-COMMON_SQL["crawl_host_extract"] = f"""
+ORACLE_HOST_EXTRACT = f"""
 WITH {FRONTIER_CTE}
 SELECT k, regexp_extract(url, 'http://([^/]+)/', 1) AS host FROM frontier
 """
 
 # P2/P3/P6 — schedulable candidates: ACTIVE, due, project RUNNING
-COMMON_SQL["crawl_candidates"] = f"""
+ORACLE_CANDIDATES = f"""
 WITH {FRONTIER_CTE}
 SELECT k, url, host, priority, exetime, project FROM frontier
 WHERE status = 1 AND exetime <= {NOW} AND project IN ('p0', 'p1')
 """
 
 # O1 — priority order per host (scheduler/task_queue.py — InQueueTask.__lt__)
-COMMON_SQL["crawl_priority_rank"] = f"""
+ORACLE_PRIORITY_RANK = f"""
 WITH {FRONTIER_CTE}
 SELECT k, host, priority,
   row_number() OVER (PARTITION BY host
@@ -209,7 +213,7 @@ FROM frontier WHERE status = 1
 """
 
 # O1+O2+O3 — stateless politeness round: per-host top-burst admission
-COMMON_SQL["crawl_politeness_topk"] = f"""
+ORACLE_SCHEDULE_STATEFUL = f"""
 WITH {FRONTIER_CTE},
 cand AS (
   SELECT k, url, host, priority, exetime, md5(url) AS taskid FROM frontier
@@ -225,7 +229,7 @@ FROM ranked WHERE rnk <= {BURST}
 """
 
 # J2 — URL-seen anti-join (taskdb.get_task dedup; bloom-verified path)
-COMMON_SQL["crawl_seen_antijoin"] = f"""
+ORACLE_SEEN_ANTIJOIN = f"""
 WITH {FRONTIER_CTE}
 SELECT f.k, f.url FROM frontier f
 WHERE NOT EXISTS (
@@ -234,7 +238,7 @@ WHERE NOT EXISTS (
 
 # U1+A4 — follows union + duplicate collapse keeping max priority /
 # min exetime (scheduler/task_queue.py — PriorityTaskQueue.put dedup)
-COMMON_SQL["crawl_follows_collapse"] = """
+ORACLE_FOLLOWS_COLLAPSE = """
 WITH f1 AS (
   SELECT concat('http://host', l_suppkey % 50, '.example/p/', l_partkey) AS url,
          CAST(l_linenumber AS INT) AS priority,
@@ -254,7 +258,7 @@ FROM fol GROUP BY url
 """
 
 # F8 — retry-delay map (scheduler/scheduler.py — DEFAULT_RETRY_DELAY)
-COMMON_SQL["crawl_retry_delay"] = f"""
+ORACLE_RETRY_DELAY = f"""
 WITH {FRONTIER_CTE}
 SELECT k, retried,
   CASE retried WHEN 0 THEN 30.0 WHEN 1 THEN 3600.0 WHEN 2 THEN 21600.0
@@ -263,14 +267,14 @@ FROM frontier
 """
 
 # A1 — status_count (database/base/taskdb.py — status_count)
-COMMON_SQL["crawl_status_count"] = f"""
+ORACLE_STATUS_COUNT = f"""
 WITH {FRONTIER_CTE}
 SELECT project, status, count(*) AS cnt FROM frontier GROUP BY project, status
 """
 
 # J1 — fetch join: schedule ⋈ pages on url; miss ⇒ 404
 # (fetcher/tornado_fetcher.py — http_fetch / handle_error)
-COMMON_SQL["crawl_fetch_join"] = f"""
+ORACLE_FETCH_JOIN = f"""
 WITH {FRONTIER_CTE},
 pages AS (
   SELECT url, CAST(floor(totalprice) AS BIGINT) AS content_len
@@ -285,7 +289,7 @@ FROM sched s LEFT JOIN pages p ON s.url = p.url
 
 # F9 — cron ticks (base_handler.every / scheduler._check_cron):
 # due tick index k = floor(elapsed / tick); emit iff k > last-emitted.
-COMMON_SQL["crawl_cron_due"] = """
+ORACLE_CRON_DUE = """
 WITH proj AS (
   SELECT concat('proj_', n_name) AS project,
          CAST((n_nationkey + 1) * 60 AS BIGINT) AS tick_s,
@@ -299,7 +303,7 @@ WHERE CAST(floor(3600.0 / tick_s) AS BIGINT) > prev_k
 """
 
 # O4 — processing-lease requeue: in-flight past lease re-emitted
-COMMON_SQL["crawl_lease_requeue"] = f"""
+ORACLE_LEASE_REQUEUE = f"""
 WITH {FRONTIER_CTE}
 SELECT k, url, exetime + 600.0 AS lease_exp FROM frontier
 WHERE status = 1 AND k % 13 = 0 AND exetime + 600.0 < {T0 + 3600.0}
@@ -308,7 +312,7 @@ WHERE status = 1 AND k % 13 = 0 AND exetime + 600.0 < {T0 + 3600.0}
 # S6 — resultdb select with stable offset paging (database/base/
 # resultdb.py — select(); webui/result.py): row_number over an explicit
 # (updatetime DESC, taskid) order, NOT bare OFFSET (order-unstable).
-COMMON_SQL["results_select_page"] = f"""
+ORACLE_RESULTS_PAGE = f"""
 WITH {FRONTIER_CTE},
 res AS (
   SELECT md5(url) AS taskid, url, exetime AS updatetime
@@ -319,11 +323,11 @@ numbered AS (
     row_number() OVER (ORDER BY updatetime DESC, taskid ASC) AS rn
   FROM res
 )
-SELECT taskid, url, updatetime, rn FROM numbered WHERE rn > 20 AND rn <= 40
+SELECT taskid, url, updatetime, CAST(rn AS INT) AS rn FROM numbered WHERE rn > 20 AND rn <= 40
 """
 
 # dedup: exact (hash-groupBy) over augmented docs
-COMMON_SQL["dedup_exact"] = f"""
+ORACLE_DEDUP_EXACT = f"""
 WITH {DOCS_AUG_CTE},
 h AS (SELECT doc_id, md5(text) AS text_hash FROM docs_aug
       WHERE text IS NOT NULL)
@@ -333,11 +337,22 @@ FROM h GROUP BY text_hash HAVING count(*) > 1
 
 
 # =====================================================================
-# PAIRED_SQL — same semantics, dialect-adjusted function names
+# Pure-SQL pairs — same semantics, dialect-adjusted function names
 # =====================================================================
 
-def _paired(build: Callable[[str], str]) -> tuple[str, str]:
-    return build("spark"), build("duck")
+Query = Callable[[SparkSession, str], DataFrame]
+
+
+def _paired(build: Callable[[str], str]) -> tuple[Query, str]:
+    """A pure-SQL gate: Spark runs ``build("spark")``, DuckDB
+    ``build("duck")``; both strings come from the same helpers."""
+    sql = build("spark")
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir)
+        return spark.sql(sql)
+
+    return run, build("duck")
 
 
 def _sql_event_windows(d: str) -> str:
@@ -618,24 +633,9 @@ SELECT vec_id, cent_id, dist FROM ranked WHERE rn = 1
 """
 
 
-PAIRED_SQL: dict[str, tuple[str, str]] = {
-    "crawl_event_window_counts": _paired(_sql_event_windows),
-    "text_token_count": _paired(_sql_token_count),
-    "text_quality_score": _paired(_sql_quality),
-    "text_lang_id": _paired(_sql_lang_id),
-    "text_fingerprint": _paired(_sql_fingerprint),
-    "dedup_ngram_jaccard": _paired(_sql_ngram_jaccard),
-    "dedup_minhash_lsh": _paired(_sql_minhash_lsh),
-    "dedup_simhash": _paired(_sql_simhash),
-    "sim_cosine_scores": _paired(_sql_cosine_scores),
-    "sim_cosine_topk": _paired(_sql_cosine_topk),
-    "sim_lsh_buckets": _paired(_sql_lsh_buckets),
-    "sim_ivf_assign": _paired(_sql_ivf_assign),
-}
-
-
 # =====================================================================
-# CUSTOM — Spark-side Python (kernels / grouped-pandas / engine)
+# Engine-backed gates — Spark runs the engine code (kernels, grouped
+# pandas, the round's stages) against a handwritten DuckDB oracle
 # =====================================================================
 
 def _frontier_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,58 +672,90 @@ FROM frontier
 """
 
 
+def _sched_cols(df: DataFrame, callback="index_page") -> DataFrame:
+    """Wrap a frame keyed by `k` with a `url` in the engine's schedule-
+    row shape. `project`, `priority` and `exetime` come from `df` when
+    it has them, else p0 / 0 / 0.0. `callback` may be a literal name or
+    a per-row Column."""
+    cb = F.lit(callback) if isinstance(callback, str) else callback
+
+    def given(name: str, default) -> Column:
+        return F.col(name) if name in df.columns else F.lit(default)
+
+    return df.select(
+        given("project", "p0").alias("project"),
+        F.md5("url").alias("taskid"),
+        "url",
+        F.col("url").alias("canon_url"),
+        F.regexp_extract("url", "http://([^/]+)/", 1).alias("host"),
+        given("priority", 0).alias("priority"),
+        given("exetime", 0.0).alias("exetime"),
+        F.lit(-1.0).alias("age"),
+        F.lit(False).alias("auto_recrawl"),
+        cb.alias("callback"),
+        F.lit(3).alias("retries_left"),
+        "k",
+    )
+
+
+def _politeness_gate(
+    spark: SparkSession,
+    sf_dir: str,
+    shape: Callable[[DataFrame], DataFrame],
+    projects: tuple[str, ...] | None = ("p0", "p1"),
+    project_caps: dict[str, int] | None = None,
+    **cfg_kw,
+) -> DataFrame:
+    """Run the engine's politeness pass (``schedule_round`` with
+    rate=1.0/burst=BURST, no robots, cold host state) over the derived
+    frontier's due ACTIVE rows of `projects` (None: every project), and
+    shape the admitted rows, keyed by `k`, with `shape`. The output is
+    materialized, then schedule_round's MEMORY_AND_DISK cache is
+    released: the round unpersists it after its sinks, and a gate that
+    drops the handle would leak one cached set per run."""
+    from pyspider_spark.config import RoundConfig
+    from pyspider_spark.engine import schema as S
+    from pyspider_spark.engine.politeness import schedule_round
+
+    cfg = RoundConfig(rate=1.0, burst=float(BURST), n_partitions=4, **cfg_kw)
+    fr = _frontier_df(spark, sf_dir)
+    due = (F.col("status") == 1) & (F.col("exetime") <= F.lit(NOW))
+    if projects:
+        due = due & F.col("project").isin(*projects)
+    cands = _sched_cols(fr.filter(due))
+    sched, _blocked, checked = schedule_round(
+        cands.drop("k"),
+        S.empty_df(spark, "host string, robots_txt string"),
+        S.empty_df(spark, S.HOST_STATE_SCHEMA),
+        cfg,
+        NOW,
+        project_caps=project_caps,
+    )
+    out = shape(sched.join(cands.select("taskid", "k"), "taskid"))
+    out = out.localCheckpoint(eager=True)
+    checked.unpersist()
+    return out
+
+
 def q_schedule_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1/O2/O3 — the engine's real politeness pass (salted two-phase
     window rank over the joined bucket state) from a cold host_state;
     from a full bucket the admitted set equals the SQL per-host
     top-⌊burst⌋ in O1 order (the oracle)."""
-    from pyspider_spark.config import RoundConfig
-    from pyspider_spark.engine import schema as S
-    from pyspider_spark.engine.politeness import schedule_round
+    from pyspider_spark.engine.stages import order_cols
 
-    cfg = RoundConfig(rate=1.0, burst=float(BURST), n_partitions=4)
-    fr = _frontier_df(spark, sf_dir)
-    cands = fr.filter(
-        (F.col("status") == 1)
-        & (F.col("exetime") <= F.lit(NOW))
-        & F.col("project").isin("p0", "p1")
-    ).select(
-        F.lit("test").alias("project"),
-        F.md5("url").alias("taskid"),
-        "url",
-        F.col("url").alias("canon_url"),
-        "host",
-        "priority",
-        "exetime",
-        F.lit(-1.0).alias("age"),
-        F.lit(False).alias("auto_recrawl"),
-        F.lit("index_page").alias("callback"),
-        F.lit(3).alias("retries_left"),
-        F.col("k"),
+    w = Window.partitionBy("host").orderBy(*order_cols())
+    return _politeness_gate(
+        spark,
+        sf_dir,
+        lambda s: s.select(
+            "k",
+            "host",
+            "url",
+            "priority",
+            (F.row_number().over(w) - 1).cast("int").alias("seq_in_host"),
+        ),
     )
-    robots = S.empty_df(spark, "host string, robots_txt string")
-    host_state = S.empty_df(spark, S.HOST_STATE_SCHEMA)
-    sched, _blocked, checked = schedule_round(
-        cands.drop("k"), robots, host_state, cfg, NOW
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("host").orderBy(
-        F.desc("priority"), F.asc("exetime"), F.asc("taskid")
-    )
-    out = sched.join(cands.select("taskid", "k"), "taskid").select(
-        "k",
-        "host",
-        F.col("canon_url").alias("url"),
-        "priority",
-        (F.row_number().over(w) - 1).cast("int").alias("seq_in_host"),
-    )
-    # materialize, then release schedule_round's MEMORY_AND_DISK cache —
-    # the engine unpersists after its sinks (round.py); a gate that
-    # drops the handle would leak one cached set per run (r3 advice)
-    out = out.localCheckpoint(eager=True)
-    checked.unpersist()
-    return out
 
 
 def q_schedule_multiproject(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,40 +763,14 @@ def q_schedule_multiproject(spark: SparkSession, sf_dir: str) -> DataFrame:
     projects of different bursts (p0→7, p1→12) and one uncapped (p2),
     from cold state. Oracle: per-host top-⌊burst⌋ then per-project
     O1-ordered top-⌊cap⌋ — the same two-stage selection in SQL."""
-    from pyspider_spark.config import RoundConfig
-    from pyspider_spark.engine import schema as S
-    from pyspider_spark.engine.politeness import schedule_round
-
-    cfg = RoundConfig(rate=1.0, burst=float(BURST), n_partitions=4, round_budget=None)
-    fr = _frontier_df(spark, sf_dir)
-    cands = fr.filter(
-        (F.col("status") == 1) & (F.col("exetime") <= F.lit(NOW))
-    ).select(
-        "project",
-        F.md5("url").alias("taskid"),
-        "url",
-        F.col("url").alias("canon_url"),
-        "host",
-        "priority",
-        "exetime",
-        F.lit(-1.0).alias("age"),
-        F.lit(False).alias("auto_recrawl"),
-        F.lit("index_page").alias("callback"),
-        F.lit(3).alias("retries_left"),
-        "k",
-    )
-    robots = S.empty_df(spark, "host string, robots_txt string")
-    host_state = S.empty_df(spark, S.HOST_STATE_SCHEMA)
-    sched, _blocked, checked = schedule_round(
-        cands.drop("k"), robots, host_state, cfg, NOW,
+    return _politeness_gate(
+        spark,
+        sf_dir,
+        lambda s: s.select("k", "project", "host", "url", "priority"),
+        projects=None,
         project_caps={"p0": 7, "p1": 12},
+        round_budget=None,
     )
-    out = sched.join(cands.select("taskid", "k"), "taskid").select(
-        "k", "project", "host", F.col("canon_url").alias("url"), "priority"
-    )
-    out = out.localCheckpoint(eager=True)  # then free the gate's cache
-    checked.unpersist()
-    return out
 
 
 ORACLE_SCHEDULE_MULTIPROJECT = f"""
@@ -791,34 +797,31 @@ WHERE (project = 'p0' AND prnk <= 7)
 """
 
 
-def _sched_cols(df: DataFrame, url_col: str = "url", callback="index_page") -> DataFrame:
-    """Wrap a (key, url) frame in the engine's schedule-row shape.
-    `callback` may be a literal name or a per-row Column."""
-    cb = F.lit(callback) if isinstance(callback, str) else callback
-    return df.select(
-        F.lit("p0").alias("project"),
-        F.md5(url_col).alias("taskid"),
-        F.col(url_col).alias("url"),
-        F.col(url_col).alias("canon_url"),
-        F.regexp_extract(url_col, "http://([^/]+)/", 1).alias("host"),
-        F.lit(0).alias("priority"),
-        F.lit(0.0).alias("exetime"),
-        F.lit(-1.0).alias("age"),
-        F.lit(False).alias("auto_recrawl"),
-        cb.alias("callback"),
-        F.lit(3).alias("retries_left"),
-        F.col("k"),
+def _fetch_cols(out: DataFrame, *extra: Column) -> DataFrame:
+    """The compared columns of a fetch gate: key, code, text length and
+    link count (a miss has neither text nor links)."""
+    return out.select(
+        "k",
+        "code",
+        *extra,
+        F.coalesce(F.length("text"), F.lit(0)).alias("text_len"),
+        F.coalesce(F.size("links"), F.lit(0)).alias("n_links"),
     )
 
 
-def q_fetch_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7/J1/F5/F7 — the engine's REAL ``fetch_and_extract`` (payload-
-    stationary join decomposition + dispatching Arrow extraction) over
-    pages synthesized from `documents`; misses exercise the 404 path.
-    Oracle: closed-form text/link arithmetic on the same construction
-    (text = '\\n'-joined text nodes ⇒ len(trim(text)) + 2 per anchor)."""
+def _fetch_extract_gate(spark: SparkSession, sf_dir: str, bucketed: bool) -> DataFrame:
+    """The engine's ``fetch_and_extract`` over pages synthesized from
+    `documents` (doc_id % 3 anchors each) for a schedule of every doc
+    plus one miss per 7th doc. `bucketed` sends the pages through
+    ``engine.ingest.ingest_pages`` into a temp dir and forces the
+    broadcast bound to 0; the output is materialized before that dir
+    is removed."""
+    import shutil
+    import tempfile
+
     from pyspider_spark.config import RoundConfig
     from pyspider_spark.engine.fetchx import fetch_and_extract
+    from pyspider_spark.engine.ingest import ingest_pages, register_pages
 
     register_views(spark, sf_dir)
     docs = spark.table("documents").select("doc_id", "text")
@@ -834,20 +837,36 @@ def q_fetch_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "utf-8",
     )
-    pages = docs.select(url.alias("canon_url"), html.alias("html"))
     hits = docs.select(F.col("doc_id").alias("k"), url.alias("url"))
     misses = docs.filter(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 1_000_000).alias("k"),
         F.concat(F.lit("http://docs.example/m/"), F.col("doc_id")).alias("url"),
     )
     sched = _sched_cols(hits.unionByName(misses))
-    out = fetch_and_extract(sched, pages, RoundConfig(n_partitions=4))
-    return out.select(
-        "k",
-        "code",
-        F.coalesce(F.length("text"), F.lit(0)).alias("text_len"),
-        F.coalesce(F.size("links"), F.lit(0)).alias("n_links"),
-    )
+    tmp = tempfile.mkdtemp(prefix="gate_pages_b_") if bucketed else None
+    try:
+        if tmp:
+            raw = f"{tmp}/raw"
+            docs.select(url.alias("url"), html.alias("html")).write.parquet(raw)
+            loc = ingest_pages(spark, raw, f"{tmp}/bucketed", n_buckets=4, precanonical=True)
+            pages = register_pages(spark, loc)
+            cfg = RoundConfig(n_partitions=4, fetch_broadcast_max_rows=0)
+        else:
+            pages = docs.select(url.alias("canon_url"), html.alias("html"))
+            cfg = RoundConfig(n_partitions=4)
+        return _fetch_cols(fetch_and_extract(sched, pages, cfg)).localCheckpoint(eager=True)
+    finally:
+        if tmp:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+
+def q_fetch_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S7/J1/F5/F7 — the engine's REAL ``fetch_and_extract`` (payload-
+    stationary join decomposition + dispatching Arrow extraction) over
+    pages synthesized from `documents`; misses exercise the 404 path.
+    Oracle: closed-form text/link arithmetic on the same construction
+    (text = '\\n'-joined text nodes ⇒ len(trim(text)) + 2 per anchor)."""
+    return _fetch_extract_gate(spark, sf_dir, bucketed=False)
 
 
 ORACLE_FETCH_EXTRACT = """
@@ -872,46 +891,7 @@ def q_fetch_extract_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast bound is forced to 0, so what the oracle checks is the
     co-located sort-merge fetch join (zero corpus-side Exchange) the
     engine plans at 100 TB schedule sizes."""
-    import tempfile
-
-    from pyspider_spark.config import RoundConfig
-    from pyspider_spark.engine.fetchx import fetch_and_extract
-    from pyspider_spark.engine.ingest import ingest_pages, register_pages
-
-    register_views(spark, sf_dir)
-    docs = spark.table("documents").select("doc_id", "text")
-    url = F.concat(F.lit("http://docs.example/d/"), F.col("doc_id"))
-    n_anchor = (F.col("doc_id") % 3).cast("int")
-    html = F.encode(
-        F.concat(
-            F.lit("<html><body><p>"),
-            F.col("text"),
-            F.lit("</p>"),
-            F.repeat(F.lit('<a href="/l/0">x</a>'), n_anchor),
-            F.lit("</body></html>"),
-        ),
-        "utf-8",
-    )
-    tmp = tempfile.mkdtemp(prefix="gate_pages_b_")
-    raw = f"{tmp}/raw"
-    docs.select(url.alias("url"), html.alias("html")).write.mode("overwrite").parquet(raw)
-    loc = ingest_pages(spark, raw, f"{tmp}/bucketed", n_buckets=4, precanonical=True)
-    pages = register_pages(spark, loc)
-    hits = docs.select(F.col("doc_id").alias("k"), url.alias("url"))
-    misses = docs.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("k"),
-        F.concat(F.lit("http://docs.example/m/"), F.col("doc_id")).alias("url"),
-    )
-    sched = _sched_cols(hits.unionByName(misses))
-    out = fetch_and_extract(
-        sched, pages, RoundConfig(n_partitions=4, fetch_broadcast_max_rows=0)
-    )
-    return out.select(
-        "k",
-        "code",
-        F.coalesce(F.length("text"), F.lit(0)).alias("text_len"),
-        F.coalesce(F.size("links"), F.lit(0)).alias("n_links"),
-    )
+    return _fetch_extract_gate(spark, sf_dir, bucketed=True)
 
 
 def q_data_url_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -976,13 +956,7 @@ def q_js_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("index_page")
         ),
     )
-    out = fetch_and_extract(sched, pages, RoundConfig(n_partitions=4))
-    return out.select(
-        "k",
-        "code",
-        F.coalesce(F.length("text"), F.lit(0)).alias("text_len"),
-        F.coalesce(F.size("links"), F.lit(0)).alias("n_links"),
-    )
+    return _fetch_cols(fetch_and_extract(sched, pages, RoundConfig(n_partitions=4)))
 
 
 # js rows (even doc_id): text gains "\ny" (the scripted anchor's text
@@ -999,29 +973,42 @@ FROM documents
 """
 
 
-def q_merge_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S3/J2/P4 — the REAL normalize→collapse→probe→merge path over two
-    batches: batch A inserts the evens; batch B re-sends everything with
-    new priorities/exetimes plus force_update/itag/age restart triggers.
-    The bloom blobs from batch A are carried into batch B's probe as
-    the engine does between rounds (broadcast in, state rows out).
-    Oracle: the on_old_request P4 rule written directly in SQL."""
+def q_merge_frontier_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S3/J2/P4 — the round's normalize→collapse→probe→MERGE path over
+    two batches: batch A inserts the evens; batch B re-sends everything
+    with new priorities/exetimes plus force_update/itag/age restart
+    triggers. Each batch runs ``stages.merge_frontier_delta`` and builds
+    the post-merge frontier as the round does (previous frontier ⊖
+    changed keys ⊕ changed rows); batch A's probe state rows are batch
+    B's blob state, as between rounds. Oracle: the on_old_request P4
+    rule written directly in SQL."""
     from pyspider_spark.config import RoundConfig
     from pyspider_spark.engine import schema as S
-    from pyspider_spark.engine.seen import probe_and_update
+    from pyspider_spark.engine.seen import BLOB_SCHEMA, probe_and_update
     from pyspider_spark.engine.stages import (
+        KEY,
         collapse_updates,
         ensure_raw_columns,
-        merge_frontier,
+        merge_frontier_delta,
         normalize_updates,
     )
 
     cfg = RoundConfig(n_partitions=4)
     fr = _frontier_df(spark, sf_dir)
 
-    def batch(df):
-        upd_all = normalize_updates(ensure_raw_columns(df), cfg)
-        return collapse_updates(upd_all)
+    def merge(prev: DataFrame, raw: DataFrame, blobs: DataFrame, now: float, rnd: int):
+        """One round's merge → (post-merge frontier, probe state rows)."""
+        upd = collapse_updates(normalize_updates(ensure_raw_columns(raw), cfg))
+        probe = probe_and_update(
+            upd.select("project", "taskid", "seen_k", "pid").withColumn("cancel", F.lit(False)),
+            blobs,
+            cfg,
+        ).localCheckpoint()
+        delta = merge_frontier_delta(
+            prev, upd, probe.filter(F.col("taskid").isNotNull()), now, rnd, cfg
+        ).drop("is_new")
+        post = prev.join(delta.select(*KEY), KEY, "left_anti").unionByName(delta)
+        return post, probe.filter(F.col("taskid").isNull()).select(*BLOB_SCHEMA.names)
 
     raw_a = fr.filter(F.col("k") % 2 == 0).select(
         "url",
@@ -1029,22 +1016,9 @@ def q_merge_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("k") % 10).cast("int").alias("priority"),
         F.lit(T0).alias("exetime"),
     )
-    upd_a = batch(raw_a)
-    probe_in_a = upd_a.select("project", "taskid", "seen_k", "pid").withColumn(
-        "cancel", F.lit(False)
+    fr_a, blobs_a = merge(
+        S.empty_df(spark, S.FRONTIER_SCHEMA), raw_a, S.empty_df(spark, BLOB_SCHEMA), T0, 0
     )
-    from pyspark.storagelevel import StorageLevel
-
-    probe_a = probe_and_update(probe_in_a, {}, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    # blobs back to the driver exactly like the round does (state rows)
-    prev = {
-        int(r["pid"]): (bytes(r["bloom_blob"]), bytes(r["cuckoo_blob"]), int(r["n_keys"]))
-        for r in probe_a.filter(F.col("taskid").isNull()).collect()
-    }
-    probe_a_data = probe_a.filter(F.col("taskid").isNotNull())
-    empty_fr = S.empty_df(spark, S.FRONTIER_SCHEMA)
-    fr_a = merge_frontier(empty_fr, upd_a, probe_a_data, T0, 0, cfg)
-
     raw_b = fr.select(
         "url",
         F.lit("p0").alias("project"),
@@ -1054,14 +1028,7 @@ def q_merge_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("k") % 7 == 0, F.lit("v2")).alias("itag"),
         F.when(F.col("k") % 11 == 0, F.lit(40.0)).otherwise(F.lit(-1.0)).alias("age"),
     )
-    upd_b = batch(raw_b)
-    probe_in_b = upd_b.select("project", "taskid", "seen_k", "pid").withColumn(
-        "cancel", F.lit(False)
-    )
-    probe_b = probe_and_update(probe_in_b, prev, cfg).filter(
-        F.col("taskid").isNotNull()
-    )
-    fr_b = merge_frontier(fr_a, upd_b, probe_b, T0 + 50.0, 1, cfg)
+    fr_b, _blobs_b = merge(fr_a, raw_b, blobs_a, T0 + 50.0, 1)
     return fr_b.select(
         "url", "status", "priority", "exetime", "retries_left", "age", "itag",
         "round_added",
@@ -1181,75 +1148,70 @@ GROUP BY p.k, p.pid
 """
 
 
-def q_probe_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2/J3 — the ENGINE's full URL-seen membership decision, exactly
-    as a round computes it: ``engine/seen.probe_and_update`` (real
-    bloom+cuckoo kernels in applyInPandas, updated blobs round-tripped
-    between batches as binary rows) followed by the merge-side
-    false-positive resolution (``engine/stages.merge_frontier``: a
-    bloom-seen row with no frontier match is treated as an insert).
-
-    Two batches: (1) insert even-k urls into fresh per-pid blobs;
-    (2) cancel k%20==0 urls, then probe ALL urls against the carried
-    blobs. Expected membership is exact set logic — inserted (k%2=0)
-    minus cancelled (k%20=0) — which the DuckDB oracle states directly.
-    Bloom FPs cannot break this (masked by the membership join, as in
-    merge_frontier); bloom has no false negatives and cancellation is
-    exact by cuckoo semantics, so any kernel/blob-round-trip defect
-    shows up as a hash mismatch."""
-    import pandas as pd  # noqa: F401 (applyInPandas path)
-
+def _probe_gate(
+    spark: SparkSession, sf_dir: str, cancelled: Column | None = None
+) -> DataFrame:
+    """The engine's URL-seen decision over two batches, as a round
+    computes it: ``seen.probe_and_update`` (real bloom+cuckoo kernels in
+    a cogrouped applyInPandas) followed by the merge-side false-positive
+    resolution (``stages.merge_frontier_delta``: a bloom-seen row with
+    no frontier match is an insert). Batch 1 inserts the even-k urls
+    into empty blob state; batch 2 first cancels the `cancelled` urls
+    (if given), then probes every url against batch 1's state rows.
+    Returns (k, url, seen)."""
     from pyspider_spark.config import RoundConfig
-    from pyspider_spark.engine.stages import pid_col
-    from pyspider_spark.engine.seen import probe_and_update
+    from pyspider_spark.engine import schema as S
+    from pyspider_spark.engine.seen import BLOB_SCHEMA, probe_and_update
+    from pyspider_spark.engine.stages import KEY, pid_col, seen_k_col
 
     cfg = RoundConfig(n_partitions=4)
-    base = _frontier_df(spark, sf_dir).select(
+    fr = _frontier_df(spark, sf_dir).withColumn("canon_url", F.col("url"))
+    base = fr.select(
         "k",
         "url",
         "project",
         F.md5("url").alias("taskid"),
-        F.md5(F.concat_ws("|", "project", "url")).alias("seen_k"),
+        seen_k_col().alias("seen_k"),
         pid_col(cfg.n_partitions).alias("pid"),
     )
     cols = ["project", "taskid", "seen_k", "pid"]
 
-    # batch 1: insert the even-k keys into fresh blobs
-    ins1 = base.filter(F.col("k") % 2 == 0)
+    ins = base.filter(F.col("k") % 2 == 0)
     p1 = probe_and_update(
-        ins1.select(*cols).withColumn("cancel", F.lit(False)), {}, cfg
+        ins.select(*cols).withColumn("cancel", F.lit(False)),
+        S.empty_df(spark, BLOB_SCHEMA),
+        cfg,
     )
-    blobs = {
-        int(row["pid"]): (
-            bytes(row["bloom_blob"]),
-            bytes(row["cuckoo_blob"]),
-            int(row["n_keys"]),
-        )
-        for row in p1.filter(F.col("project").isNull()).collect()
-    }
-
-    # batch 2: cancels first (k%20==0 ⊂ inserted), then probe everything
-    upd2 = (
-        base.filter(F.col("k") % 20 == 0)
-        .select(*cols)
-        .withColumn("cancel", F.lit(True))
-        .unionByName(base.select(*cols).withColumn("cancel", F.lit(False)))
+    upd2 = base.select(*cols).withColumn("cancel", F.lit(False))
+    if cancelled is not None:
+        cancels = base.filter(cancelled).select(*cols).withColumn("cancel", F.lit(True))
+        upd2 = cancels.unionByName(upd2)
+    p2 = probe_and_update(
+        upd2, p1.filter(F.col("taskid").isNull()).select(*BLOB_SCHEMA.names), cfg
     )
-    p2 = probe_and_update(upd2, blobs, cfg)
-    verdicts = p2.filter(F.col("project").isNotNull() & ~F.col("cancel")).select(
-        "project", "taskid", "seen"
-    )
-    # merge-side FP resolution: seen only counts with a frontier match
-    member = ins1.select("project", "taskid").withColumn("m", F.lit(True))
+    verdicts = p2.filter(F.col("taskid").isNotNull() & ~F.col("cancel"))
+    member = ins.select(*KEY).withColumn("m", F.lit(True))
     return (
-        verdicts.join(F.broadcast(member), ["project", "taskid"], "left")
-        .join(base.select("k", "url", "project", "taskid"), ["project", "taskid"])
+        verdicts.join(F.broadcast(member), KEY, "left")
+        .join(base.select("k", "url", *KEY), KEY)
         .select(
             "k",
             "url",
             (F.col("seen") & F.coalesce(F.col("m"), F.lit(False))).alias("seen"),
         )
     )
+
+
+def q_probe_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J2/J3 — the ENGINE's full URL-seen membership decision
+    (:func:`_probe_gate`), with batch 2 cancelling the k%20==0 urls
+    before it probes. Expected membership is exact set logic —
+    inserted (k%2=0) minus cancelled (k%20=0) — which the DuckDB oracle
+    states directly. Bloom FPs cannot break this (masked by the
+    membership join, as in the merge); bloom has no false negatives and
+    cancellation is exact by cuckoo semantics, so any kernel or
+    blob-state defect shows up as a hash mismatch."""
+    return _probe_gate(spark, sf_dir, cancelled=F.col("k") % 20 == 0)
 
 
 ORACLE_PROBE_VERIFIED = f"""
@@ -1381,18 +1343,6 @@ SELECT s.k, s.host, s.url, s.priority, CAST(s.rnk - 1 AS INT) AS seq_in_host,
   coalesce(p.content_len, 0) AS content_len
 FROM sched s LEFT JOIN pages p ON s.url = p.url
 """)
-
-
-# =====================================================================
-# Registry assembly
-# =====================================================================
-
-def _common_runner(sql: str) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(sql)
-
-    return run
 
 
 def q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2334,39 +2284,6 @@ WHERE window_start + 300 <= (SELECT epoch(max(ts)) - 600 FROM events)
 """
 
 
-# =====================================================================
-# Engine-backed twins of former COMMON_SQL rows (round-2 verdict "Next
-# round" #7): the Spark side now drives the REAL engine kernel /
-# expression / join the round pipeline runs, while the oracle keeps the
-# original SQL spec — the rows can fail again. The entries below are
-# POPPED from COMMON_SQL. As of round 5 every former spec pin is
-# engine-backed (lease_requeue — the last one — now drives
-# ``stages.lease_requeue``, the O4 function a future async fetcher
-# would call); COMMON_SQL is empty and the assertion pins it.
-# =====================================================================
-
-_CONVERTED_ORACLE: dict[str, str] = {
-    name: COMMON_SQL.pop(name)
-    for name in (
-        "crawl_taskid_md5",
-        "crawl_host_extract",
-        "crawl_candidates",
-        "crawl_priority_rank",
-        "crawl_retry_delay",
-        "crawl_status_count",
-        "crawl_fetch_join",
-        "results_select_page",
-        "crawl_politeness_topk",
-        "crawl_seen_antijoin",
-        "crawl_follows_collapse",
-        "crawl_cron_due",
-        "crawl_lease_requeue",
-        "dedup_exact",
-    )
-}
-assert not COMMON_SQL, f"unexplained spec pins remain: {sorted(COMMON_SQL)}"
-
-
 def q_taskid_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 via the REAL kernel: ``kernels.canon.taskid_series`` (the md5
     taskid every normalize pass derives) as an Arrow batch, not a SQL
@@ -2582,20 +2499,10 @@ def q_http_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_df = spark.table("documents").select("doc_id", "text")
     url = F.concat(F.lit("http://docs.example/d/"), F.col("doc_id"))
     sched = _sched_cols(docs_df.select(F.col("doc_id").alias("k"), url.alias("url")))
-    out = fetch_http_and_extract(sched, cfg)
-    return out.select(
-        "k",
-        "code",
+    return _fetch_cols(
+        fetch_http_and_extract(sched, cfg),
         F.col("redirect_url").isNotNull().alias("redirected"),
-        F.coalesce(F.length("text"), F.lit(0)).alias("text_len"),
-        F.coalesce(F.size("links"), F.lit(0)).alias("n_links"),
     )
-
-
-ORACLE_RESULTS_PAGE = _CONVERTED_ORACLE["results_select_page"].replace(
-    "SELECT taskid, url, updatetime, rn FROM numbered",
-    "SELECT taskid, url, updatetime, CAST(rn AS INT) AS rn FROM numbered",
-)
 
 
 # --- round-4 conversions: the last spec pins with engine twins ---------
@@ -2610,47 +2517,17 @@ def q_politeness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises the O3 global cut (TakeOrdered over ``order_cols()``)
     that its stateful sibling leaves unbounded. Oracle: per-host
     top-BURST in O1 order, then the global O1-ordered top-TOPK_BUDGET."""
-    from pyspider_spark.config import RoundConfig
-    from pyspider_spark.engine import schema as S
-    from pyspider_spark.engine.politeness import schedule_round
     from pyspider_spark.engine.stages import order_cols
 
-    cfg = RoundConfig(
-        rate=1.0, burst=float(BURST), n_partitions=4, round_budget=TOPK_BUDGET
-    )
-    fr = _frontier_df(spark, sf_dir)
-    cands = fr.filter(
-        (F.col("status") == 1)
-        & (F.col("exetime") <= F.lit(NOW))
-        & F.col("project").isin("p0", "p1")
-    ).select(
-        "project",
-        F.md5("url").alias("taskid"),
-        "url",
-        F.col("url").alias("canon_url"),
-        "host",
-        "priority",
-        "exetime",
-        F.lit(-1.0).alias("age"),
-        F.lit(False).alias("auto_recrawl"),
-        F.lit("index_page").alias("callback"),
-        F.lit(3).alias("retries_left"),
-        "k",
-    )
-    robots = S.empty_df(spark, "host string, robots_txt string")
-    host_state = S.empty_df(spark, S.HOST_STATE_SCHEMA)
-    sched, _blocked, checked = schedule_round(
-        cands.drop("k"), robots, host_state, cfg, NOW
-    )
     w = Window.orderBy(*order_cols())
-    out = (
-        sched.join(cands.select("taskid", "k"), "taskid")
-        .withColumn("grank", F.row_number().over(w).cast("int"))
-        .select("k", "host", F.col("canon_url").alias("url"), "priority", "grank")
+    return _politeness_gate(
+        spark,
+        sf_dir,
+        lambda s: s.withColumn("grank", F.row_number().over(w).cast("int")).select(
+            "k", "host", "url", "priority", "grank"
+        ),
+        round_budget=TOPK_BUDGET,
     )
-    out = out.localCheckpoint(eager=True)  # then free the gate's cache
-    checked.unpersist()
-    return out
 
 
 ORACLE_POLITENESS_TOPK = f"""
@@ -2685,52 +2562,13 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_seen_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 via the ENGINE's URL-seen path — ``seen.probe_and_update``
-    (real bloom+cuckoo blobs) + the merge-side FP resolution, emitting
-    the rows that SURVIVE the anti-join (never-seen → schedulable),
-    exactly how a round decides which follows are new. Oracle is the
-    exact NOT EXISTS over the inserted key set: bloom FPs must be
-    resolved away, and a bloom false negative (impossible by
+    """J2 via the ENGINE's URL-seen path (:func:`_probe_gate`, no
+    cancels), emitting the rows that SURVIVE the anti-join (never-seen
+    → schedulable), exactly how a round decides which follows are new.
+    Oracle is the exact NOT EXISTS over the inserted key set: bloom FPs
+    must be resolved away, and a bloom false negative (impossible by
     construction) would surface as an extra row."""
-    from pyspider_spark.config import RoundConfig
-    from pyspider_spark.engine.stages import pid_col
-    from pyspider_spark.engine.seen import probe_and_update
-
-    cfg = RoundConfig(n_partitions=4)
-    base = _frontier_df(spark, sf_dir).select(
-        "k",
-        "url",
-        "project",
-        F.md5("url").alias("taskid"),
-        F.md5(F.concat_ws("|", "project", "url")).alias("seen_k"),
-        pid_col(cfg.n_partitions).alias("pid"),
-    )
-    cols = ["project", "taskid", "seen_k", "pid"]
-    ins = base.filter(F.col("k") % 2 == 0)
-    p1 = probe_and_update(
-        ins.select(*cols).withColumn("cancel", F.lit(False)), {}, cfg
-    )
-    blobs = {
-        int(row["pid"]): (
-            bytes(row["bloom_blob"]),
-            bytes(row["cuckoo_blob"]),
-            int(row["n_keys"]),
-        )
-        for row in p1.filter(F.col("project").isNull()).collect()
-    }
-    p2 = probe_and_update(
-        base.select(*cols).withColumn("cancel", F.lit(False)), blobs, cfg
-    )
-    verdicts = p2.filter(F.col("project").isNotNull()).select(
-        "project", "taskid", "seen"
-    )
-    member = ins.select("project", "taskid").withColumn("m", F.lit(True))
-    return (
-        verdicts.join(F.broadcast(member), ["project", "taskid"], "left")
-        .filter(~(F.col("seen") & F.coalesce(F.col("m"), F.lit(False))))
-        .join(base.select("k", "url", "project", "taskid"), ["project", "taskid"])
-        .select("k", "url")
-    )
+    return _probe_gate(spark, sf_dir).filter(~F.col("seen")).select("k", "url")
 
 
 def q_follows_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2801,26 +2639,27 @@ def q_cron_due(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CUSTOM: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+# =====================================================================
+# The registry: gate name → (Spark query, DuckDB oracle), in check
+# order. The driver checks only the first 50 gates, so every gate that
+# runs engine code comes first and the pure-SQL pairs, which no engine
+# change can reach, come last.
+# =====================================================================
+
+GATES: dict[str, tuple[Query, str]] = {
     "crawl_politeness_topk": (q_politeness_topk, ORACLE_POLITENESS_TOPK),
-    "crawl_seen_antijoin": (q_seen_antijoin, _CONVERTED_ORACLE["crawl_seen_antijoin"]),
-    "crawl_follows_collapse": (
-        q_follows_collapse,
-        _CONVERTED_ORACLE["crawl_follows_collapse"],
-    ),
-    "crawl_cron_due": (q_cron_due, _CONVERTED_ORACLE["crawl_cron_due"]),
-    "crawl_lease_requeue": (
-        q_lease_requeue,
-        _CONVERTED_ORACLE["crawl_lease_requeue"],
-    ),
-    "dedup_exact": (q_dedup_exact, _CONVERTED_ORACLE["dedup_exact"]),
-    "crawl_taskid_md5": (q_taskid_md5, _CONVERTED_ORACLE["crawl_taskid_md5"]),
-    "crawl_host_extract": (q_host_extract, _CONVERTED_ORACLE["crawl_host_extract"]),
-    "crawl_candidates": (q_candidates, _CONVERTED_ORACLE["crawl_candidates"]),
-    "crawl_priority_rank": (q_priority_rank, _CONVERTED_ORACLE["crawl_priority_rank"]),
-    "crawl_retry_delay": (q_retry_delay, _CONVERTED_ORACLE["crawl_retry_delay"]),
-    "crawl_status_count": (q_status_count, _CONVERTED_ORACLE["crawl_status_count"]),
-    "crawl_fetch_join": (q_fetch_join, _CONVERTED_ORACLE["crawl_fetch_join"]),
+    "crawl_seen_antijoin": (q_seen_antijoin, ORACLE_SEEN_ANTIJOIN),
+    "crawl_follows_collapse": (q_follows_collapse, ORACLE_FOLLOWS_COLLAPSE),
+    "crawl_cron_due": (q_cron_due, ORACLE_CRON_DUE),
+    "crawl_lease_requeue": (q_lease_requeue, ORACLE_LEASE_REQUEUE),
+    "dedup_exact": (q_dedup_exact, ORACLE_DEDUP_EXACT),
+    "crawl_taskid_md5": (q_taskid_md5, ORACLE_TASKID_MD5),
+    "crawl_host_extract": (q_host_extract, ORACLE_HOST_EXTRACT),
+    "crawl_candidates": (q_candidates, ORACLE_CANDIDATES),
+    "crawl_priority_rank": (q_priority_rank, ORACLE_PRIORITY_RANK),
+    "crawl_retry_delay": (q_retry_delay, ORACLE_RETRY_DELAY),
+    "crawl_status_count": (q_status_count, ORACLE_STATUS_COUNT),
+    "crawl_fetch_join": (q_fetch_join, ORACLE_FETCH_JOIN),
     "results_select_page": (q_results_page, ORACLE_RESULTS_PAGE),
     "crawl_http_fetch": (q_http_fetch, ORACLE_HTTP_FETCH),
     "crawl_window_rollup": (q_window_rollup, ORACLE_WINDOW_ROLLUP),
@@ -2834,19 +2673,13 @@ CUSTOM: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "dedup_embedding_keep": (q_embedding_keep, _sql_embedding_keep("duck")),
     "dedup_embedding_incremental": (q_embedding_incremental, _sql_embedding_incremental("duck")),
     "sim_lsh_near_dup": (q_lsh_near_dup, _sql_lsh_near_dup("duck")),
-    "crawl_schedule_stateful": (
-        q_schedule_stateful,
-        _CONVERTED_ORACLE["crawl_politeness_topk"],
-    ),
-    "crawl_schedule_multiproject": (
-        q_schedule_multiproject,
-        ORACLE_SCHEDULE_MULTIPROJECT,
-    ),
+    "crawl_schedule_stateful": (q_schedule_stateful, ORACLE_SCHEDULE_STATEFUL),
+    "crawl_schedule_multiproject": (q_schedule_multiproject, ORACLE_SCHEDULE_MULTIPROJECT),
     "crawl_fetch_extract": (q_fetch_extract, ORACLE_FETCH_EXTRACT),
     "crawl_fetch_extract_bucketed": (q_fetch_extract_bucketed, ORACLE_FETCH_EXTRACT),
     "crawl_data_url_fetch": (q_data_url_fetch, ORACLE_DATA_URL_FETCH),
     "crawl_js_fetch": (q_js_fetch, ORACLE_JS_FETCH),
-    "crawl_merge_frontier": (q_merge_frontier, ORACLE_MERGE_FRONTIER),
+    "crawl_merge_frontier": (q_merge_frontier_delta, ORACLE_MERGE_FRONTIER),
     "dedup_simhash_pairs": (q_simhash_near_dup, ORACLE_SIMHASH_PAIRS),
     "dedup_simhash_pairs64": (q_simhash_near_dup64, ORACLE_SIMHASH_PAIRS64),
     "dedup_simhash_incremental": (q_simhash_incremental, ORACLE_SIMHASH_INCREMENTAL),
@@ -2860,25 +2693,24 @@ CUSTOM: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "mm_decode_features": (q_multimodal_features, ORACLE_MM_FEATURES),
     "mm_resize": (q_multimodal_resize, ORACLE_MM_RESIZE),
     "mm_frame_sample": (q_multimodal_frames, ORACLE_MM_FRAMES),
+    "crawl_event_window_counts": _paired(_sql_event_windows),
+    "text_token_count": _paired(_sql_token_count),
+    "text_quality_score": _paired(_sql_quality),
+    "text_lang_id": _paired(_sql_lang_id),
+    "text_fingerprint": _paired(_sql_fingerprint),
+    "dedup_ngram_jaccard": _paired(_sql_ngram_jaccard),
+    "dedup_minhash_lsh": _paired(_sql_minhash_lsh),
+    "dedup_simhash": _paired(_sql_simhash),
+    "sim_cosine_scores": _paired(_sql_cosine_scores),
+    "sim_cosine_topk": _paired(_sql_cosine_topk),
+    "sim_lsh_buckets": _paired(_sql_lsh_buckets),
+    "sim_ivf_assign": _paired(_sql_ivf_assign),
 }
 
 
-def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name, sql in COMMON_SQL.items():
-        out[name] = _common_runner(sql)
-    for name, (spark_sql, _duck) in PAIRED_SQL.items():
-        out[name] = _common_runner(spark_sql)
-    for name, (fn, _oracle) in CUSTOM.items():
-        out[name] = fn
-    return out
+def build_queries() -> dict[str, Query]:
+    return {name: fn for name, (fn, _oracle) in GATES.items()}
 
 
 def build_oracles() -> dict[str, str]:
-    out: dict[str, str] = dict(COMMON_SQL)
-    for name, (_spark_sql, duck) in PAIRED_SQL.items():
-        out[name] = duck
-    for name, (_fn, oracle) in CUSTOM.items():
-        if oracle is not None:
-            out[name] = oracle
-    return out
+    return {name: oracle for name, (_fn, oracle) in GATES.items()}

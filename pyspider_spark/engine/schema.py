@@ -46,8 +46,7 @@ FRONTIER_SCHEMA = StructType(
         # an age/force/itag re-crawl sends If-None-Match /
         # If-Modified-Since, and a 304 settles SUCCESS with the stored
         # result untouched — the crawl-scale bandwidth saver. Two
-        # nullable ~20-byte strings per row; appended LAST so the
-        # positional _insert_cols/_restarted_cols zips stay aligned.
+        # nullable ~20-byte strings per row, appended LAST.
         StructField("etag", StringType()),
         StructField("last_modified", StringType()),
     ]

@@ -90,13 +90,6 @@ BLOB_SCHEMA = StructType(
 )
 
 
-def blobs_df_of(spark, prev: dict[int, tuple[bytes | None, bytes | None, int]]):
-    """Lift a driver-side blob dict into BLOB_SCHEMA rows (tests,
-    contract entries)."""
-    rows = [(int(p), b, c, int(n)) for p, (b, c, n) in sorted((prev or {}).items())]
-    return spark.createDataFrame(rows, BLOB_SCHEMA)
-
-
 def register_blob_table(
     blob_meta: dict, d: str, rel: str, default_cap: int,
     caps: dict[int, int] | None = None,
@@ -118,15 +111,13 @@ def register_blob_table(
 
 def probe_and_update(
     updates: DataFrame,
-    prev_blobs,
+    prev_blobs: DataFrame,
     cfg: RoundConfig,
 ) -> DataFrame:
     """updates cols: project, taskid, seen_k, pid, cancel.
 
-    prev_blobs: a DataFrame of BLOB_SCHEMA rows (pid, bloom_blob,
-    cuckoo_blob, n_keys) — the engine path — or, for tests/contract
-    convenience, a dict pid -> (bloom_bytes|None, cuckoo_bytes|None,
-    n_keys) which is lifted via :func:`blobs_df_of`.
+    prev_blobs: BLOB_SCHEMA rows (pid, bloom_blob, cuckoo_blob, n_keys),
+    e.g. the previous probe's state rows.
 
     Updates and blob state are COGROUPED by pid, so each task receives
     exactly its partition's blob (blob bytes shuffle once, data-sized,
@@ -141,11 +132,6 @@ def probe_and_update(
     """
     m_default, k_default = bloom_params(cfg.bloom_expected_keys, cfg.bloom_target_fpr)
     n_buckets = cfg.cuckoo_buckets
-    blob_df = (
-        prev_blobs
-        if isinstance(prev_blobs, DataFrame)
-        else blobs_df_of(updates.sparkSession, prev_blobs)
-    )
 
     def fn(key: tuple, pdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
@@ -240,7 +226,7 @@ def probe_and_update(
 
     return (
         updates.groupBy("pid")
-        .cogroup(blob_df.groupBy("pid"))
+        .cogroup(prev_blobs.groupBy("pid"))
         .applyInPandas(fn, schema=PROBE_SCHEMA)
     )
 

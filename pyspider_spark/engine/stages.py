@@ -222,24 +222,23 @@ def collapse_updates(upd: DataFrame) -> DataFrame:
     )
 
 
-def _insert_cols(now: float, rnd: int, cfg: RoundConfig, src: str = "") -> list[Column]:
-    """Fresh ACTIVE frontier row from (possibly aliased) update cols."""
-    c = (lambda n: F.col(f"{src}.{n}")) if src else F.col
+def _insert_cols(now: float, rnd: int, cfg: RoundConfig) -> list[str | Column]:
+    """Fresh ACTIVE frontier row from the update cols."""
     return [
-        c("project").alias("project"),
-        c("taskid").alias("taskid"),
-        c("url").alias("url"),
-        c("canon_url").alias("canon_url"),
-        c("host").alias("host"),
+        "project",
+        "taskid",
+        "url",
+        "canon_url",
+        "host",
         F.lit(ACTIVE).alias("status"),
-        c("priority").alias("priority"),
+        "priority",
         F.lit(cfg.max_retries).alias("retries_left"),
-        c("exetime").alias("exetime"),
-        c("age").alias("age"),
-        c("itag").alias("itag"),
-        c("force_update").alias("force_update"),
-        c("auto_recrawl").alias("auto_recrawl"),
-        c("callback").alias("callback"),
+        "exetime",
+        "age",
+        "itag",
+        "force_update",
+        "auto_recrawl",
+        "callback",
         F.lit(0.0).alias("lastcrawltime"),
         F.lit(now).alias("updatetime"),
         F.lit(rnd).alias("round_added"),
@@ -258,32 +257,6 @@ def _restart_cond(now: float) -> Column:
     )
 
 
-def _restarted_cols(now: float, cfg: RoundConfig) -> list[Column]:
-    """The post-restart row content — one source of truth shared by the
-    full-merge (CoW) and changed-rows (MoR) paths so they cannot drift."""
-    return [
-        F.col("o.url").alias("url"),
-        F.col("o.canon_url").alias("canon_url"),
-        F.col("o.host").alias("host"),
-        F.lit(ACTIVE).alias("status"),
-        F.greatest("o.priority", "u.priority").alias("priority"),
-        F.lit(cfg.max_retries).alias("retries_left"),
-        F.col("u.exetime").alias("exetime"),
-        F.when(F.col("u.age") >= 0, F.col("u.age")).otherwise(F.col("o.age")).alias("age"),
-        F.coalesce("u.itag", "o.itag").alias("itag"),
-        F.col("o.force_update").alias("force_update"),
-        (F.col("o.auto_recrawl") | F.col("u.auto_recrawl")).alias("auto_recrawl"),
-        F.col("o.callback").alias("callback"),
-        F.col("o.lastcrawltime").alias("lastcrawltime"),
-        F.lit(now).alias("updatetime"),
-        F.col("o.round_added").alias("round_added"),
-        # restart keeps the last crawl's validators — that is the whole
-        # point: the age-recrawl fetch sends them conditionally
-        F.col("o.etag").alias("etag"),
-        F.col("o.last_modified").alias("last_modified"),
-    ]
-
-
 def merge_frontier_delta(
     fr: DataFrame,
     upd: DataFrame,
@@ -294,9 +267,9 @@ def merge_frontier_delta(
     upd_rows: int | None = None,
 ) -> DataFrame:
     """Changed-rows-only MERGE — the merge-on-read write path (Iceberg
-    equality-delete/upsert files; SURVEY §2.1 S3). Same admission
-    semantics as :func:`merge_frontier`, but returns ONLY the rows a
-    round actually changes, plus an ``is_new`` flag:
+    equality-delete/upsert files; SURVEY §2.1 S3). Returns ONLY the
+    rows a round changes, plus an ``is_new`` flag; unchanged frontier
+    rows carry through by key:
 
     - bloom-unseen updates → fresh ACTIVE inserts (``is_new`` true)
     - bloom-seen updates missing from the frontier (bloom FPs) →
@@ -328,7 +301,25 @@ def merge_frontier_delta(
     restarts = matched.filter(_restart_cond(now)).select(
         F.col("o.project").alias("project"),
         F.col("o.taskid").alias("taskid"),
-        *_restarted_cols(now, cfg),
+        F.col("o.url").alias("url"),
+        F.col("o.canon_url").alias("canon_url"),
+        F.col("o.host").alias("host"),
+        F.lit(ACTIVE).alias("status"),
+        F.greatest("o.priority", "u.priority").alias("priority"),
+        F.lit(cfg.max_retries).alias("retries_left"),
+        F.col("u.exetime").alias("exetime"),
+        F.when(F.col("u.age") >= 0, F.col("u.age")).otherwise(F.col("o.age")).alias("age"),
+        F.coalesce("u.itag", "o.itag").alias("itag"),
+        F.col("o.force_update").alias("force_update"),
+        (F.col("o.auto_recrawl") | F.col("u.auto_recrawl")).alias("auto_recrawl"),
+        F.col("o.callback").alias("callback"),
+        F.col("o.lastcrawltime").alias("lastcrawltime"),
+        F.lit(now).alias("updatetime"),
+        F.col("o.round_added").alias("round_added"),
+        # restart keeps the last crawl's validators — that is the whole
+        # point: the age-recrawl fetch sends them conditionally
+        F.col("o.etag").alias("etag"),
+        F.col("o.last_modified").alias("last_modified"),
     )
     return (
         new_inserts.unionByName(fp_inserts)
@@ -336,41 +327,3 @@ def merge_frontier_delta(
         .unionByName(restarts.withColumn("is_new", F.lit(False)))
     )
 
-
-def merge_frontier(
-    fr: DataFrame, upd: DataFrame, probe: DataFrame, now: float, rnd: int, cfg: RoundConfig
-) -> DataFrame:
-    """MERGE collapsed updates into the frontier (Iceberg ``MERGE INTO``
-    in production; full-outer join + rewrite in the sandbox shim).
-
-    - bloom-unseen rows: direct insert, never touch the frontier join
-    - bloom-seen rows: full-outer vs frontier on (project, taskid);
-      match ⇒ on_old_request restart rule P4, no match (bloom FP) ⇒ insert
-    """
-    upd = upd.join(probe.select(*KEY, "seen"), KEY, "inner")
-    inserts = upd.filter(~F.col("seen")).select(_insert_cols(now, rnd, cfg))
-
-    o, u = fr.alias("o"), upd.filter(F.col("seen")).alias("u")
-    j = o.join(u, KEY, "full_outer")
-
-    has_old = F.col("o.status").isNotNull()
-    has_upd = F.col("u.seen").isNotNull()
-    restart = _restart_cond(now)
-
-    names = [f.name for f in fr.schema.fields]
-    merged = j.select(
-        F.col("project"),
-        F.col("taskid"),
-        # per non-key column: insert branch (old side null, bloom FP) →
-        # value from u; restart branch → shared P4 row content;
-        # otherwise the existing row carries through unchanged
-        *[
-            F.when(~has_old, ins).when(has_upd & restart, rst).otherwise(F.col(f"o.{n}"))
-            for ins, rst, n in zip(
-                _insert_cols(now, rnd, cfg, src="u")[2:],  # skip key cols
-                _restarted_cols(now, cfg),
-                names[2:],
-            )
-        ],
-    ).toDF(*names)  # restore aliases (the when() wrapper strips them)
-    return merged.unionByName(inserts)
